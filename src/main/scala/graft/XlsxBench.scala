@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Throughput benchmark for the xlsx surface — the reference's core
@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   * layout the scan plans one InputPartition per file over).
   *
   * Usage: runMain graft.XlsxBench [rows=1000000] [parts=16] [dir=target/xlsxbench]
+  * The session comes from `GraftSession.build()` (cores from
+  * `$SPARK_GRAFT_CPUS`), the same confs as `graft.Bench`.
   * Prints one JSON line: rows, MB on disk, seconds and rows/s per stage.
   */
 object XlsxBench {
@@ -19,15 +21,7 @@ object XlsxBench {
     val rows = if (args.length > 0) args(0).toLong else 1000000L
     val parts = if (args.length > 1) args(1).toInt else 16
     val dir = if (args.length > 2) args(2) else "target/xlsxbench"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val spark = GraftSession.build()
 
     // 8 mixed-type columns exercising the shared-strings-free inline path,
     // numeric cells, dates, and booleans — the sanitizer's full surface.

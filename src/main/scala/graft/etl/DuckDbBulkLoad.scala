@@ -36,6 +36,21 @@ object DuckDbBulkLoad {
   private def qid(id: String) = "\"" + id.replace("\"", "\"\"") + "\""
   private def qstr(s: String) = "'" + s.replace("'", "''") + "'"
 
+  /** Statement locks: every JDBC URL maps to one of a fixed set of JVM
+    * locks (bounded — a long-lived process that loads into many database
+    * files holds no per-URL state; two URLs sharing a lock only serialize
+    * their short statement sections). */
+  private val statementLocks = Array.fill(64)(new Object)
+
+  /** Runs `f` — a write's statement section against `jdbcUrl` — under
+    * that database's JVM lock. `XlsxToDatabase.load` runs its sheets on
+    * concurrent threads; holding the lock from connect through CHECKPOINT
+    * and close means no best-effort CHECKPOINT ever meets another of the
+    * process's write transactions on the same database. Reentrant (a
+    * plain monitor), and never nested across two databases. */
+  private[etl] def serialized[A](jdbcUrl: String)(f: => A): A =
+    statementLocks(Math.floorMod(jdbcUrl.hashCode, statementLocks.length)).synchronized(f)
+
   /** Write `df` to `table` honoring `mode`; falls back to the generic
     * JDBC sink for non-DuckDB URLs. Returns the number of rows loaded —
     * counted from the staging parquet's FOOTER METADATA (milliseconds),
@@ -100,67 +115,72 @@ object DuckDbBulkLoad {
     try {
       df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
       val pat = qstr(s"$dir/*.parquet")
-      val conn = DriverManager.getConnection(jdbcUrl, props)
-      try {
-        val st = conn.createStatement()
-        def stagedRows: Long = {
-          val rs = st.executeQuery(s"SELECT COUNT(*) FROM read_parquet($pat)")
-          rs.next(); rs.getLong(1)
-        }
-        def exists: Boolean = {
-          val ps = conn.prepareStatement(
-            "SELECT count(*) FROM information_schema.tables " +
-              "WHERE table_name = ? AND table_schema = current_schema() " +
-              "AND table_type = 'BASE TABLE'")
-          ps.setString(1, table)
-          val rs = ps.executeQuery()
-          rs.next() && rs.getLong(1) > 0
-        }
-        // CHECKPOINT before the connection closes: a small write (CTAS of
-        // a few rows) otherwise lives ONLY in the .wal — under the
-        // auto-checkpoint threshold, close does not fold it in — and a
-        // later opener (e.g. Spark's JDBC read, which connects with its
-        // own Properties and thus its own duckdb instance cache key) can
-        // race WAL replay and silently drop the table. Observed: a
-        // two-sheet load where the second sheet's table vanished when the
-        // first was read back. Checkpointing makes the on-disk file the
-        // complete truth before any other opener arrives.
-        // Best-effort like upsert's (XlsxToDatabase.scala:160): CHECKPOINT
-        // can legitimately fail while another live transaction holds the
-        // WAL; then we merely fall back to (racy but usually fine) replay.
-        def loaded(rows: Long): Long = {
-          try st.execute("CHECKPOINT")
-          catch { case _: java.sql.SQLException => () }
-          rows
-        }
-        mode match {
-          case SaveMode.Overwrite =>
-            st.execute(s"CREATE OR REPLACE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-            loaded(stagedRows)
-          case SaveMode.Append =>
-            if (exists) {
-              // Insert BY NAME, not position: an existing table whose
-              // column order differs from the DataFrame's would silently
-              // mismap type-compatible columns under `INSERT ... SELECT *`
-              // (Spark's JDBC sink names its columns; so must we).
-              val cols = df.schema.fieldNames.map(qid).mkString(", ")
-              st.execute(
-                s"INSERT INTO ${qid(table)} ($cols) SELECT $cols FROM read_parquet($pat)")
-            } else st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-            loaded(stagedRows)
-          case SaveMode.ErrorIfExists =>
-            if (exists) throw new IllegalStateException(
-              s"table $table already exists (SaveMode.ErrorIfExists)")
-            st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-            loaded(stagedRows)
-          case SaveMode.Ignore =>
-            if (exists) 0L
-            else {
+      serialized(jdbcUrl) {
+        val conn = DriverManager.getConnection(jdbcUrl, props)
+        try {
+          val st = conn.createStatement()
+          def stagedRows: Long = {
+            val rs = st.executeQuery(s"SELECT COUNT(*) FROM read_parquet($pat)")
+            rs.next(); rs.getLong(1)
+          }
+          def exists: Boolean = {
+            val ps = conn.prepareStatement(
+              "SELECT count(*) FROM information_schema.tables " +
+                "WHERE table_name = ? AND table_schema = current_schema() " +
+                "AND table_type = 'BASE TABLE'")
+            ps.setString(1, table)
+            val rs = ps.executeQuery()
+            rs.next() && rs.getLong(1) > 0
+          }
+          // CHECKPOINT before the connection closes: a small write (CTAS of
+          // a few rows) otherwise lives ONLY in the .wal — under the
+          // auto-checkpoint threshold, close does not fold it in — and a
+          // later opener (e.g. Spark's JDBC read, which connects with its
+          // own Properties and thus its own duckdb instance cache key) can
+          // race WAL replay and silently drop the table. Observed: a
+          // two-sheet load where the second sheet's table vanished when the
+          // first was read back. Checkpointing makes the on-disk file the
+          // complete truth before any other opener arrives.
+          // Best-effort: CHECKPOINT fails while another live transaction
+          // holds the WAL. This section runs under `serialized`, as does
+          // upsert's merge, so the other writers of this process (the
+          // concurrent sheets of one load among them) never hold one here;
+          // only a writer outside this object (another process, a user's
+          // own connection) can still make it fall back to WAL replay.
+          def loaded(rows: Long): Long = {
+            try st.execute("CHECKPOINT")
+            catch { case _: java.sql.SQLException => () }
+            rows
+          }
+          mode match {
+            case SaveMode.Overwrite =>
+              st.execute(s"CREATE OR REPLACE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
+              loaded(stagedRows)
+            case SaveMode.Append =>
+              if (exists) {
+                // Insert BY NAME, not position: an existing table whose
+                // column order differs from the DataFrame's would silently
+                // mismap type-compatible columns under `INSERT ... SELECT *`
+                // (Spark's JDBC sink names its columns; so must we).
+                val cols = df.schema.fieldNames.map(qid).mkString(", ")
+                st.execute(
+                  s"INSERT INTO ${qid(table)} ($cols) SELECT $cols FROM read_parquet($pat)")
+              } else st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
+              loaded(stagedRows)
+            case SaveMode.ErrorIfExists =>
+              if (exists) throw new IllegalStateException(
+                s"table $table already exists (SaveMode.ErrorIfExists)")
               st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
               loaded(stagedRows)
-            }
-        }
-      } finally conn.close()
+            case SaveMode.Ignore =>
+              if (exists) 0L
+              else {
+                st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
+                loaded(stagedRows)
+              }
+          }
+        } finally conn.close()
+      }
     } finally {
       // staging cleanup on every path (mirrors upsert's staging discipline)
       val files = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())

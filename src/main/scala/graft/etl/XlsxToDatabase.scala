@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.util.Properties
+import java.util.concurrent.{Callable, Executors}
 import java.util.zip.ZipFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -39,7 +40,26 @@ object XlsxToDatabase {
     * tool's append/replace switch; `onlySheets` restricts to named
     * sheets (default: every sheet, one table each); `upsertKeys`
     * switches to key-idempotent upsert semantics (see [[upsert]] —
-    * `mode` is then ignored). */
+    * `mode` is then ignored).
+    *
+    * Sheets load concurrently, every mode alike: each sheet's pipeline
+    * (schema inference, the scan into parquet staging, the database
+    * statement) runs on a driver thread of a pool of at most
+    * `defaultParallelism` threads, so the sheets' one-task scan jobs run
+    * side by side instead of one after another. The pool is created by
+    * this call, so its threads inherit the caller's Spark local
+    * properties (job group, scheduler pool). Sheets whose names sanitize
+    * to the same table share one thread and load in sheet order, so the
+    * last of them still wins under Overwrite.
+    *
+    * The database statements stay serialized per database: each sheet's
+    * CTAS/INSERT, upsert merge and CHECKPOINT run under one JVM lock per
+    * JDBC URL (`DuckDbBulkLoad.serialized`) — only the scans overlap.
+    *
+    * Returns one [[LoadedTable]] per sheet, in sheet order. On failure
+    * the call waits for every sheet to settle, then rethrows the first
+    * failing sheet's own exception (in sheet order); sheets that finished
+    * stay loaded, as the sheets before a failing one always did. */
   def load(spark: SparkSession, xlsxPath: String, jdbcUrl: String,
            mode: SaveMode = SaveMode.Overwrite,
            connectionProps: Properties = new Properties(),
@@ -55,14 +75,28 @@ object XlsxToDatabase {
           s"no such sheet(s): ${missing.mkString(", ")}; have ${all.mkString(", ")}")
         all.filter(w.contains)
     }
-    chosen.map { sheet =>
+    def loadSheet(sheet: String): Either[Throwable, LoadedTable] = try {
       val df = readSheet(spark, xlsxPath, sheet)
       val table = sanitizeTableName(sheet)
       val loaded = upsertKeys match {
-        case Some(keys) => upsert(df, jdbcUrl, table, keys, connectionProps); df.count()
+        case Some(keys) => upsert(df, jdbcUrl, table, keys, connectionProps)
         case None => DuckDbBulkLoad.write(df, jdbcUrl, table, mode, connectionProps)
       }
-      LoadedTable(sheet, table, loaded)
+      Right(LoadedTable(sheet, table, loaded))
+    } catch { case e: Throwable => Left(e) } // rethrown below, once every sheet settled
+    // sheet positions, grouped by target table (each group in sheet order)
+    val byTable = chosen.indices.groupBy(i => sanitizeTableName(chosen(i))).values.toSeq
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(byTable.size, spark.sparkContext.defaultParallelism)))
+    val settled = try byTable
+      .map(group => pool.submit(new Callable[Seq[(Int, Either[Throwable, LoadedTable])]] {
+        def call() = group.map(i => i -> loadSheet(chosen(i)))
+      }))
+      .flatMap(_.get()).sortBy(_._1)
+    finally pool.shutdown()
+    settled.map {
+      case (_, Right(t)) => t
+      case (_, Left(e)) => throw e
     }
   }
 
@@ -79,7 +113,9 @@ object XlsxToDatabase {
     * staging + INSERT … SELECT), so per-row logic never runs on the
     * driver and the target table is never observable half-merged.
     * Standard dialect SQL only — no PRIMARY KEY requirement on the
-    * target (DuckDB cannot ALTER one in later). */
+    * target (DuckDB cannot ALTER one in later). Returns the number of
+    * rows staged for the merge (the frame's row count), which the
+    * staging write counts from its parquet footers — no second scan. */
   /** Test failpoint: invoked between the staging write and the merge —
     * the most dangerous instant of an upsert (parallel work done,
     * nothing committed). The crash-recovery spec points this at a
@@ -88,7 +124,7 @@ object XlsxToDatabase {
   private[graft] var interruptAfterStage: () => Unit = () => ()
 
   def upsert(df: DataFrame, jdbcUrl: String, table: String, keys: Seq[String],
-             connectionProps: Properties = new Properties()): Unit =
+             connectionProps: Properties = new Properties()): Long =
     try upsertOnce(df, jdbcUrl, table, keys, connectionProps)
     catch {
       // Observed under load (flaky, ~1/500 suite runs): Spark's JDBC
@@ -117,7 +153,7 @@ object XlsxToDatabase {
   }
 
   private def upsertOnce(df: DataFrame, jdbcUrl: String, table: String, keys: Seq[String],
-             connectionProps: Properties): Unit = {
+             connectionProps: Properties): Long = {
     DuckDbDialect.registered
     require(keys.nonEmpty, "upsert requires at least one key column")
     val missing = keys.filterNot(df.columns.contains)
@@ -135,46 +171,51 @@ object XlsxToDatabase {
     try {
       val st = conn.createStatement()
       try {
-        DuckDbBulkLoad.write(df, jdbcUrl, staging, SaveMode.Overwrite, connectionProps)
+        val staged = DuckDbBulkLoad.write(df, jdbcUrl, staging, SaveMode.Overwrite, connectionProps)
         interruptAfterStage()
-        val exists = {
-          // base tables in the CURRENT schema only: a same-named view or a
-          // table in another schema must not flip this into the merge branch
-          val ps = conn.prepareStatement(
-            "SELECT count(*) FROM information_schema.tables " +
-              "WHERE table_name = ? AND table_schema = current_schema() " +
-              "AND table_type = 'BASE TABLE'")
-          ps.setString(1, table)
-          val rs = ps.executeQuery()
-          rs.next() && rs.getLong(1) > 0
+        // the merge runs under the database's statement lock, like every
+        // bulk-load statement (see DuckDbBulkLoad.serialized)
+        DuckDbBulkLoad.serialized(jdbcUrl) {
+          val exists = {
+            // base tables in the CURRENT schema only: a same-named view or a
+            // table in another schema must not flip this into the merge branch
+            val ps = conn.prepareStatement(
+              "SELECT count(*) FROM information_schema.tables " +
+                "WHERE table_name = ? AND table_schema = current_schema() " +
+                "AND table_type = 'BASE TABLE'")
+            ps.setString(1, table)
+            val rs = ps.executeQuery()
+            rs.next() && rs.getLong(1) > 0
+          }
+          // DISTINCT at merge time makes the upsert idempotent under
+          // DUPLICATE TASK ATTEMPTS, not just batch replays: a speculative
+          // or retried writer task commits its partition's rows into the
+          // staging table a second time (Spark's JDBC sink transacts per
+          // partition ATTEMPT — nothing dedups across attempts), and a
+          // plain INSERT…SELECT would forward those doubles into the
+          // target. Collapsing full-row duplicates is exactly the inverse
+          // of what attempt duplication produces (byte-identical rows);
+          // rows that differ in ANY column are preserved.
+          if (!exists) {
+            st.execute(s"CREATE TABLE ${q(table)} AS SELECT DISTINCT * FROM ${q(staging)}")
+          } else {
+            // IS NOT DISTINCT FROM: NULL keys must match themselves, or
+            // NULL-keyed rows re-insert on every run (idempotence breaks)
+            val keyEq = keys.map(k => s"t.${q(k)} IS NOT DISTINCT FROM s.${q(k)}")
+              .mkString(" AND ")
+            val cols = df.columns.map(q).mkString(", ")
+            conn.setAutoCommit(false)
+            try {
+              st.execute(s"DELETE FROM ${q(table)} t USING ${q(staging)} s WHERE $keyEq")
+              st.execute(s"INSERT INTO ${q(table)} ($cols) SELECT DISTINCT $cols FROM ${q(staging)}")
+              conn.commit()
+            } catch {
+              case e: Throwable => conn.rollback(); throw e
+            } finally conn.setAutoCommit(true)
+          }
         }
-        // DISTINCT at merge time makes the upsert idempotent under
-        // DUPLICATE TASK ATTEMPTS, not just batch replays: a speculative
-        // or retried writer task commits its partition's rows into the
-        // staging table a second time (Spark's JDBC sink transacts per
-        // partition ATTEMPT — nothing dedups across attempts), and a
-        // plain INSERT…SELECT would forward those doubles into the
-        // target. Collapsing full-row duplicates is exactly the inverse
-        // of what attempt duplication produces (byte-identical rows);
-        // rows that differ in ANY column are preserved.
-        if (!exists) {
-          st.execute(s"CREATE TABLE ${q(table)} AS SELECT DISTINCT * FROM ${q(staging)}")
-        } else {
-          // IS NOT DISTINCT FROM: NULL keys must match themselves, or
-          // NULL-keyed rows re-insert on every run (idempotence breaks)
-          val keyEq = keys.map(k => s"t.${q(k)} IS NOT DISTINCT FROM s.${q(k)}")
-            .mkString(" AND ")
-          val cols = df.columns.map(q).mkString(", ")
-          conn.setAutoCommit(false)
-          try {
-            st.execute(s"DELETE FROM ${q(table)} t USING ${q(staging)} s WHERE $keyEq")
-            st.execute(s"INSERT INTO ${q(table)} ($cols) SELECT DISTINCT $cols FROM ${q(staging)}")
-            conn.commit()
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally conn.setAutoCommit(true)
-        }
-      } finally {
+        staged
+      } finally DuckDbBulkLoad.serialized(jdbcUrl) {
         // always drop staging — merge failure AND half-written staging
         // alike (the write runs inside this try, so no failure path can
         // orphan a per-run staging table)
@@ -184,8 +225,9 @@ object XlsxToDatabase {
         // that reopens the file in the instant the last connection's
         // instance tears down can otherwise attach to the pre-upsert
         // snapshot (observed with duckdb_jdbc under load — the read saw
-        // an empty catalog). Best-effort: CHECKPOINT can legitimately
-        // fail if another live transaction holds the WAL.
+        // an empty catalog). Best-effort: CHECKPOINT fails while another
+        // live transaction holds the WAL, which the statement lock rules
+        // out for this process's own writers.
         try st.execute("CHECKPOINT")
         catch { case _: java.sql.SQLException => () }
       }

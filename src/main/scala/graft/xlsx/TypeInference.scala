@@ -45,8 +45,10 @@ object TypeInference {
       else StringType
   }
 
-  /** One streaming pass over the sheet (capped at `sampleRows` data rows):
-    * finds the header row, column count, and per-column types. */
+  /** One streaming pass over the sheet's prefix: finds the header row,
+    * column count, and per-column types from the first `sampleRows` data
+    * rows, then stops reading — rows past the sample are never parsed, so
+    * inference costs the sample, not the sheet. */
   def infer(zip: ZipFile, partName: String, shared: Array[String],
             dateStyle: Array[Boolean], date1904: Boolean,
             headerRow: Boolean, inferTypes: Boolean,
@@ -57,7 +59,10 @@ object TypeInference {
     var dataRows = 0
     var toSkip = skipRows
 
-    foreachRow(zip, partName, shared, dateStyle, _ => true) { row =>
+    def sampled = dataRows == sampleRows && (header.isDefined || !headerRow)
+    val rows = rowIterator(zip, partName, shared, dateStyle, _ => true)
+    try while (!sampled && rows.hasNext) {
+      val row = rows.next()
       if (row.hasAnyCell && toSkip > 0) toSkip -= 1 // pre-header banner rows
       else if (row.hasAnyCell && dataRows <= sampleRows) {
         // cells can be empty even when hasAnyCell (all-error cells, bad
@@ -84,7 +89,7 @@ object TypeInference {
           }
         }
       }
-    }
+    } finally rows.close()
 
     val nCols = maxCol + 1
     while (stats.size < nCols) stats += new ColStat

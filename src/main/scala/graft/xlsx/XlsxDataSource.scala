@@ -128,8 +128,7 @@ object XlsxDataSource {
     }.getOrElse(0))
 
   /** Sheet selection: by name, else by 0-based index, else the first. */
-  def resolveSheet(zip: ZipFile, o: Opts): XlsxParser.SheetInfo = {
-    val wb = XlsxParser.parseWorkbook(zip)
+  def resolveSheet(wb: XlsxParser.Workbook, o: Opts): XlsxParser.SheetInfo =
     (o.sheet, o.sheetIndex) match {
       case (Some(n), _) => wb.sheets.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(s"no sheet named '$n'; have ${wb.sheets.map(_.name).mkString(", ")}"))
@@ -140,14 +139,13 @@ object XlsxDataSource {
       case (None, None) => wb.sheets.headOption.getOrElse(
         throw new IllegalArgumentException("workbook has no sheets"))
     }
-  }
 
   def inferFromFirstFile(paths: Seq[String], options: CaseInsensitiveStringMap): TypeInference.SheetSchema = {
     val o = opts(options)
     val zip = new ZipFile(paths.head)
     try {
       val wb = XlsxParser.parseWorkbook(zip)
-      val sheet = resolveSheet(zip, o)
+      val sheet = resolveSheet(wb, o)
       TypeInference.infer(zip, sheet.partName, XlsxParser.parseSharedStrings(zip),
         XlsxParser.parseDateStyles(zip), wb.date1904, o.headerRow, o.inferTypes,
         o.sampleRows, o.skipRows)
@@ -467,7 +465,7 @@ private[xlsx] abstract class XlsxReaderBase(path: String, fullSchema: StructType
   private val zip = new ZipFile(path)
   private val wb = XlsxParser.parseWorkbook(zip)
   private val rows: XlsxParser.RowIterator = {
-    val sheet = XlsxDataSource.resolveSheet(zip, o)
+    val sheet = XlsxDataSource.resolveSheet(wb, o)
     XlsxParser.rowIterator(zip, sheet.partName, XlsxParser.parseSharedStrings(zip),
       XlsxParser.parseDateStyles(zip), wanted.contains, o.failFast)
   }

@@ -12,6 +12,18 @@ import org.scalatest.matchers.should.Matchers
 class JdbcSinkSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
+  /** Six sheets of uneven sizes — more sheets than TestSpark's 4 cores,
+    * so `load` queues some behind others. */
+  private val sizes = Seq(3000, 7, 1200, 1, 400, 2500)
+  private def writeSixSheets(path: String): Seq[(String, String, Long)] = {
+    XlsxWriter.write(path, sizes.zipWithIndex.map { case (n, i) =>
+      XlsxWriter.Sheet(s"Sheet $i", Seq("id", "v"), (1 to n).map(r => Seq(r.toDouble, s"s$i-$r")))
+    })
+    sizes.zipWithIndex.map { case (n, i) => (s"Sheet $i", s"sheet_$i", n.toLong) }
+  }
+  private def loadedRows(url: String, table: String): Long =
+    XlsxToDatabase.readJdbc(spark, url, table).count()
+
   test("xlsx workbook loads into DuckDB, one table per sheet, and reads back") {
     val dir = Files.createTempDirectory("etl")
     val xlsx = dir.resolve("book.xlsx").toString
@@ -109,13 +121,14 @@ class JdbcSinkSpec extends AnyFunSuite with Matchers {
     val v1 = dir.resolve("v1.xlsx").toString
     XlsxWriter.write(v1, Seq(XlsxWriter.Sheet("People", Seq("id", "name", "score"),
       Seq(Seq(1.0, "alice", 1.0), Seq(2.0, "bob", 2.0)))))
-    // first load creates the table through the same upsert path
-    XlsxToDatabase.load(spark, v1, url, upsertKeys = Some(Seq("id")))
+    // first load creates the table through the same upsert path; rows
+    // reports the sheet's rows, as a count of the frame would
+    XlsxToDatabase.load(spark, v1, url, upsertKeys = Some(Seq("id"))).map(_.rows) shouldBe Seq(2L)
     // v2 updates bob, adds carol, leaves alice untouched
     val v2 = dir.resolve("v2.xlsx").toString
     XlsxWriter.write(v2, Seq(XlsxWriter.Sheet("People", Seq("id", "name", "score"),
       Seq(Seq(2.0, "bob", 20.0), Seq(3.0, "carol", 3.0)))))
-    XlsxToDatabase.load(spark, v2, url, upsertKeys = Some(Seq("id")))
+    XlsxToDatabase.load(spark, v2, url, upsertKeys = Some(Seq("id"))).map(_.rows) shouldBe Seq(2L)
     // duckdb_jdbc tears the shared file instance down when the last
     // connection closes; a read that reopens the file in that instant can
     // transiently miss the catalog (observed once under parallel-suite
@@ -201,5 +214,65 @@ class JdbcSinkSpec extends AnyFunSuite with Matchers {
     XlsxToDatabase.load(spark, xlsx, url, SaveMode.Overwrite)
     XlsxToDatabase.load(spark, xlsx, url, SaveMode.Append)
     XlsxToDatabase.readJdbc(spark, url, "s").count() shouldBe 2
+  }
+
+  test("sheets load concurrently: results in sheet order, every table readable at once") {
+    val dir = Files.createTempDirectory("etlpar")
+    val xlsx = dir.resolve("book.xlsx").toString
+    val want = writeSixSheets(xlsx)
+    // five fresh database files: a table lost to a CHECKPOINT racing
+    // another sheet's write would show on one of them
+    (1 to 5).foreach { k =>
+      val url = s"jdbc:duckdb:${dir.resolve(s"t$k.duckdb")}"
+      XlsxToDatabase.load(spark, xlsx, url).map(t => (t.sheet, t.table, t.rows)) shouldBe want
+      want.foreach { case (_, table, n) => loadedRows(url, table) shouldBe n }
+    }
+  }
+
+  test("a failing sheet fails the concurrent load with its own exception") {
+    val dir = Files.createTempDirectory("etlfail")
+    val whole = dir.resolve("whole.xlsx").toString
+    val want = writeSixSheets(whole)
+    // the same workbook without the third sheet's worksheet part
+    val xlsx = dir.resolve("book.xlsx").toString
+    val in = new java.util.zip.ZipFile(whole)
+    val out = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(xlsx))
+    try in.stream().filter(_.getName != "xl/worksheets/sheet3.xml").forEach { e =>
+      out.putNextEntry(new java.util.zip.ZipEntry(e.getName))
+      in.getInputStream(e).transferTo(out)
+      out.closeEntry()
+    } finally { out.close(); in.close() }
+
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    val e = the[IllegalArgumentException] thrownBy XlsxToDatabase.load(spark, xlsx, url)
+    e.getMessage should include("missing worksheet part")
+    e.getMessage should include("sheet3.xml")
+    // every other sheet settled before the rethrow and stays loaded
+    want.filterNot(_._2 == "sheet_2").foreach { case (_, table, n) => loadedRows(url, table) shouldBe n }
+  }
+
+  test("an upsert load of a multi-sheet workbook is idempotent") {
+    val dir = Files.createTempDirectory("etlupar")
+    val xlsx = dir.resolve("book.xlsx").toString
+    val want = writeSixSheets(xlsx)
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    (1 to 2).foreach { _ =>
+      XlsxToDatabase.load(spark, xlsx, url, upsertKeys = Some(Seq("id")))
+        .map(t => (t.sheet, t.table, t.rows)) shouldBe want
+      want.foreach { case (_, table, n) => loadedRows(url, table) shouldBe n }
+    }
+  }
+
+  test("sheets that sanitize to one table load in sheet order: the last one wins") {
+    val dir = Files.createTempDirectory("etldup")
+    val xlsx = dir.resolve("book.xlsx").toString
+    XlsxWriter.write(xlsx, Seq(
+      XlsxWriter.Sheet("Dup Name", Seq("v"), Seq(Seq(1.0))),
+      XlsxWriter.Sheet("other", Seq("v"), Seq(Seq(1.0))),
+      XlsxWriter.Sheet("dup_name", Seq("v"), Seq(Seq(2.0), Seq(3.0)))))
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    XlsxToDatabase.load(spark, xlsx, url).map(t => (t.table, t.rows)) shouldBe
+      Seq(("dup_name", 1L), ("other", 1L), ("dup_name", 2L))
+    loadedRows(url, "dup_name") shouldBe 2L
   }
 }

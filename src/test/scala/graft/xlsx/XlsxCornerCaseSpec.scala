@@ -7,13 +7,46 @@ import org.scalatest.matchers.should.Matchers
 
 /** The documented xlsx corner-case semantics (XlsxDataSource scaladoc),
   * one pin each: merged cells read as stored (anchor value, nulls
-  * elsewhere), formula cells read their cached `<v>`, and `skipRows`
-  * drops banner rows of a multi-row header before the real header. */
+  * elsewhere), formula cells read their cached `<v>`, `skipRows`
+  * drops banner rows of a multi-row header before the real header, and
+  * schema inference parses only its `sampleRows` sample. */
 class XlsxCornerCaseSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
   private def tmp(name: String): String =
     Files.createTempDirectory("xlsxcorner").resolve(name).toString
+
+  test("inference reads only its sample: a sheet malformed past the sample still infers") {
+    // header + 10 sampled data rows + 10 rows past the sample; row 16
+    // holds a string in the double column, row 19 a third column
+    val rows = (2 to 21).map { r =>
+      val b = if (r == 16) s"""<c r="B$r" t="s"><v>2</v></c>""" else s"""<c r="B$r"><v>${r * 1.5}</v></c>"""
+      val c = if (r == 19) s"""<c r="C$r"><v>99</v></c>""" else ""
+      s"""<row r="$r"><c r="A$r"><v>$r</v></c>$b$c</row>"""
+    }.mkString("\n")
+    val header = """<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>"""
+    val shared = "<si><t>id</t></si><si><t>amount</t></si><si><t>oops</t></si>"
+    val good = tmp("sample-good.xlsx")
+    RawXlsx.workbook(good, header + rows, shared)
+    // same rows, then a well-formedness error inside the (valid) zip entry
+    val bad = tmp("sample-bad.xlsx")
+    RawXlsx.workbook(bad, header + rows + """<row r="22"><c r="A22"><v>22</v></c><<</row>""", shared)
+    def reader(sample: Int) = spark.read.format("xlsx").option("sampleRows", sample)
+    def read(path: String, sample: Int) = reader(sample).load(path)
+
+    val expected = org.apache.spark.sql.types.StructType.fromDDL("id DOUBLE, amount DOUBLE")
+    read(bad, 10).schema shouldBe expected
+    read(good, 10).schema shouldBe expected
+    // the same sheet fails once inference or the scan parses past row 21
+    an[Exception] should be thrownBy read(bad, 100)
+    an[Exception] should be thrownBy reader(10).schema(expected).load(bad).collect()
+
+    val back = read(good, 10).orderBy("id").collect()
+    back.length shouldBe 20
+    back.map(_.length).distinct.toSeq shouldBe Seq(2) // column C stays out
+    back.find(_.getDouble(0) == 16.0).get.isNullAt(1) shouldBe true // PERMISSIVE
+    back.find(_.getDouble(0) == 17.0).get.getDouble(1) shouldBe 25.5
+  }
 
   test("merged cells: value lands in the anchor cell only, rest of the region is null") {
     val path = tmp("merged.xlsx")
