@@ -1,9 +1,10 @@
 package graft.etl
 
 import java.nio.file.{Files, Path}
-import java.sql.DriverManager
+import java.sql.{DriverManager, SQLException, Statement}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import DuckDbDialect.{quoteIdentifier => qid}
 
 /** Bulk-load fast path for DuckDB JDBC targets.
   *
@@ -12,13 +13,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * in 7–9 s), which would make the engine's core xlsx→database workload
   * insert-bound at any scale. The warehouse-native idiom is staged bulk
   * ingest: write the DataFrame to a parquet staging directory (Spark's
-  * fully parallel writer), then issue ONE set-based statement over JDBC
-  * (`CREATE OR REPLACE TABLE … AS SELECT * FROM read_parquet(…)`), which
-  * DuckDB executes with its own parallel parquet reader. Same shape as
-  * the upsert's staging-table design (XlsxToDatabase.upsert): the
-  * per-row path never runs anywhere, and type mapping rides on parquet
-  * (timestamps, decimals, nulls — no JDBC bind-type drift). Measured
-  * ~40× over the row path at 25k rows; the gap widens with volume.
+  * fully parallel writer), then issue set-based statements over JDBC that
+  * DuckDB executes with its own parallel parquet reader. Every DuckDB
+  * write runs through [[staged]]: [[write]]'s CTAS/INSERT and
+  * XlsxToDatabase.upsert's merge alike read the parquet stage directly,
+  * so the per-row path never runs anywhere and type mapping rides on
+  * parquet (timestamps, decimals, nulls — no JDBC bind-type drift).
+  * Measured ~40× over the row path at 25k rows; the gap widens with
+  * volume.
   *
   * SaveMode semantics match Spark's JDBC sink (table-level):
   * Overwrite = replace table; Append = create-if-absent then insert;
@@ -33,7 +35,6 @@ object DuckDbBulkLoad {
 
   def supports(jdbcUrl: String): Boolean = jdbcUrl.startsWith("jdbc:duckdb:")
 
-  private def qid(id: String) = "\"" + id.replace("\"", "\"\"") + "\""
   private def qstr(s: String) = "'" + s.replace("'", "''") + "'"
 
   /** Statement locks: every JDBC URL maps to one of a fixed set of JVM
@@ -50,6 +51,30 @@ object DuckDbBulkLoad {
     * plain monitor), and never nested across two databases. */
   private[etl] def serialized[A](jdbcUrl: String)(f: => A): A =
     statementLocks(Math.floorMod(jdbcUrl.hashCode, statementLocks.length)).synchronized(f)
+
+  /** Runs `f` on a statement of a fresh connection, closed on every path. */
+  private[etl] def connected[A](jdbcUrl: String, props: Properties)(f: Statement => A): A = {
+    val conn = DriverManager.getConnection(jdbcUrl, props)
+    try f(conn.createStatement()) finally conn.close()
+  }
+
+  /** Whether `table` is a base table of the connection's current schema:
+    * a same-named view or a table in another schema is not the target. */
+  private[etl] def tableExists(st: Statement, table: String): Boolean = {
+    val ps = st.getConnection.prepareStatement(
+      "SELECT count(*) FROM information_schema.tables " +
+        "WHERE table_name = ? AND table_schema = current_schema() " +
+        "AND table_type = 'BASE TABLE'")
+    ps.setString(1, table)
+    val rs = ps.executeQuery()
+    rs.next() && rs.getLong(1) > 0
+  }
+
+  /** COUNT(*) over a relation expression (a table name or a table function). */
+  private[etl] def rowCount(st: Statement, relation: String): Long = {
+    val rs = st.executeQuery(s"SELECT COUNT(*) FROM $relation")
+    rs.next(); rs.getLong(1)
+  }
 
   /** Write `df` to `table` honoring `mode`; falls back to the generic
     * JDBC sink for non-DuckDB URLs. Returns the number of rows loaded —
@@ -85,28 +110,45 @@ object DuckDbBulkLoad {
         case Some(after) => after // Overwrite/ErrorIfExists/first-write Ignore load the whole table
         case None => df.count()
       }
-    } else writeDuckDb(df, jdbcUrl, table, mode, props, stagingParent)
+    } else staged(df, jdbcUrl, props, stagingParent) { (st, src) =>
+      val target = qid(table)
+      val statement =
+        if (mode == SaveMode.Overwrite) Some(s"CREATE OR REPLACE TABLE $target AS SELECT * FROM $src")
+        else if (!tableExists(st, table)) Some(s"CREATE TABLE $target AS SELECT * FROM $src")
+        else mode match {
+          case SaveMode.Append =>
+            // Insert BY NAME, not position: an existing table whose
+            // column order differs from the DataFrame's would silently
+            // mismap type-compatible columns under `INSERT ... SELECT *`
+            // (Spark's JDBC sink names its columns; so must we).
+            val cols = df.schema.fieldNames.map(qid).mkString(", ")
+            Some(s"INSERT INTO $target ($cols) SELECT $cols FROM $src")
+          case SaveMode.Ignore => None
+          case _ /* ErrorIfExists */ => throw new IllegalStateException(
+            s"table $table already exists (SaveMode.ErrorIfExists)")
+        }
+      statement.fold(0L) { s => st.execute(s); rowCount(st, src) }
+    }
   }
 
   /** COUNT(*) on `table` via JDBC; None when the table doesn't exist
-    * (probe query fails). Identifier quoting comes from the URL's
-    * registered JdbcDialect — ANSI double quotes would make the probe
-    * fail unconditionally on backtick dialects (MySQL), turning every
-    * Append/Overwrite count into the degraded fallback path. */
-  private def jdbcCount(jdbcUrl: String, table: String, props: Properties): Option[Long] = {
-    val quoted = org.apache.spark.sql.jdbc.JdbcDialects.get(jdbcUrl).quoteIdentifier(table)
-    val conn = DriverManager.getConnection(jdbcUrl, props)
-    try {
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $quoted")
-        rs.next(); Some(rs.getLong(1))
-      } catch { case _: java.sql.SQLException => None }
-    } finally conn.close()
-  }
+    * (probe query fails). The name goes into the query RAW, exactly as
+    * Spark's JDBC sink writes it into its CREATE TABLE and its own
+    * existence probe: a quoted name would miss the table on databases
+    * that fold unquoted identifiers (Derby, Oracle: upper case). */
+  private def jdbcCount(jdbcUrl: String, table: String, props: Properties): Option[Long] =
+    connected(jdbcUrl, props) { st =>
+      try Some(rowCount(st, table)) catch { case _: SQLException => None }
+    }
 
-  private def writeDuckDb(df: DataFrame, jdbcUrl: String, table: String, mode: SaveMode,
-                          props: Properties, stagingParent: Option[Path]): Long = {
+  /** The one statement section of every DuckDB write: stages `df` as
+    * parquet, then — under the database's statement lock, on one
+    * connection — runs `body(statement, src)`, where `src` is the
+    * `read_parquet(…)` relation over the stage, and a best-effort
+    * CHECKPOINT. The staging directory is deleted on every path. */
+  private[etl] def staged[A](df: DataFrame, jdbcUrl: String, props: Properties,
+                             stagingParent: Option[Path] = None)
+                            (body: (Statement, String) => A): A = {
     DuckDbDialect.registered
     val dir: Path = stagingParent match {
       case Some(p) => Files.createTempDirectory(p, "graft_duckload_")
@@ -114,75 +156,29 @@ object DuckDbBulkLoad {
     }
     try {
       df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      val pat = qstr(s"$dir/*.parquet")
-      serialized(jdbcUrl) {
-        val conn = DriverManager.getConnection(jdbcUrl, props)
-        try {
-          val st = conn.createStatement()
-          def stagedRows: Long = {
-            val rs = st.executeQuery(s"SELECT COUNT(*) FROM read_parquet($pat)")
-            rs.next(); rs.getLong(1)
-          }
-          def exists: Boolean = {
-            val ps = conn.prepareStatement(
-              "SELECT count(*) FROM information_schema.tables " +
-                "WHERE table_name = ? AND table_schema = current_schema() " +
-                "AND table_type = 'BASE TABLE'")
-            ps.setString(1, table)
-            val rs = ps.executeQuery()
-            rs.next() && rs.getLong(1) > 0
-          }
-          // CHECKPOINT before the connection closes: a small write (CTAS of
-          // a few rows) otherwise lives ONLY in the .wal — under the
-          // auto-checkpoint threshold, close does not fold it in — and a
-          // later opener (e.g. Spark's JDBC read, which connects with its
-          // own Properties and thus its own duckdb instance cache key) can
-          // race WAL replay and silently drop the table. Observed: a
-          // two-sheet load where the second sheet's table vanished when the
-          // first was read back. Checkpointing makes the on-disk file the
-          // complete truth before any other opener arrives.
-          // Best-effort: CHECKPOINT fails while another live transaction
-          // holds the WAL. This section runs under `serialized`, as does
-          // upsert's merge, so the other writers of this process (the
-          // concurrent sheets of one load among them) never hold one here;
-          // only a writer outside this object (another process, a user's
-          // own connection) can still make it fall back to WAL replay.
-          def loaded(rows: Long): Long = {
-            try st.execute("CHECKPOINT")
-            catch { case _: java.sql.SQLException => () }
-            rows
-          }
-          mode match {
-            case SaveMode.Overwrite =>
-              st.execute(s"CREATE OR REPLACE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-              loaded(stagedRows)
-            case SaveMode.Append =>
-              if (exists) {
-                // Insert BY NAME, not position: an existing table whose
-                // column order differs from the DataFrame's would silently
-                // mismap type-compatible columns under `INSERT ... SELECT *`
-                // (Spark's JDBC sink names its columns; so must we).
-                val cols = df.schema.fieldNames.map(qid).mkString(", ")
-                st.execute(
-                  s"INSERT INTO ${qid(table)} ($cols) SELECT $cols FROM read_parquet($pat)")
-              } else st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-              loaded(stagedRows)
-            case SaveMode.ErrorIfExists =>
-              if (exists) throw new IllegalStateException(
-                s"table $table already exists (SaveMode.ErrorIfExists)")
-              st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-              loaded(stagedRows)
-            case SaveMode.Ignore =>
-              if (exists) 0L
-              else {
-                st.execute(s"CREATE TABLE ${qid(table)} AS SELECT * FROM read_parquet($pat)")
-                loaded(stagedRows)
-              }
-          }
-        } finally conn.close()
-      }
+      serialized(jdbcUrl)(connected(jdbcUrl, props) { st =>
+        val out = body(st, s"read_parquet(${qstr(s"$dir/*.parquet")})")
+        // CHECKPOINT before the connection closes: a small write (CTAS of
+        // a few rows) otherwise lives ONLY in the .wal — under the
+        // auto-checkpoint threshold, close does not fold it in — and a
+        // later opener (e.g. Spark's JDBC read, which connects with its
+        // own Properties and thus its own duckdb instance cache key) can
+        // race WAL replay and silently drop the table or attach to the
+        // pre-write snapshot. Observed: a two-sheet load where the second
+        // sheet's table vanished when the first was read back.
+        // Checkpointing makes the on-disk file the complete truth before
+        // any other opener arrives.
+        // Best-effort: CHECKPOINT fails while another live transaction
+        // holds the WAL. This section runs under `serialized`, so the
+        // other writers of this process (the concurrent sheets of one
+        // load among them) never hold one here; only a writer outside
+        // this object (another process, a user's own connection) can
+        // still make it fall back to WAL replay.
+        try st.execute("CHECKPOINT")
+        catch { case _: SQLException => () }
+        out
+      })
     } finally {
-      // staging cleanup on every path (mirrors upsert's staging discipline)
       val files = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
       try files.forEach(p => Files.deleteIfExists(p)) finally files.close()
     }

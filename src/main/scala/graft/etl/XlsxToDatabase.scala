@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Spark-first shape: each sheet becomes a DataFrame via the custom DSv2
   * xlsx source (schema inference + column pruning live there), and the
-  * write is `df.write.jdbc` — batched inserts, per-partition connections,
-  * retry/txn semantics from Spark's JDBC sink. At scale the same call
-  * fans out one writer task per partition.
+  * write is [[DuckDbBulkLoad]] — a parquet stage plus set-based
+  * statements on DuckDB, Spark's JDBC sink elsewhere. At scale the same
+  * call fans out one writer task per partition.
   */
 object XlsxToDatabase {
 
@@ -25,13 +25,9 @@ object XlsxToDatabase {
     finally zip.close()
   }
 
-  def readSheet(spark: SparkSession, xlsxPath: String, sheet: String,
-                headerRow: Boolean = true, inferSchema: Boolean = true): DataFrame =
-    spark.read.format("xlsx")
-      .option("sheet", sheet)
-      .option("headerRow", headerRow)
-      .option("inferSchema", inferSchema)
-      .load(xlsxPath)
+  /** One sheet as a DataFrame: header row, inferred schema. */
+  def readSheet(spark: SparkSession, xlsxPath: String, sheet: String): DataFrame =
+    spark.read.format("xlsx").option("sheet", sheet).load(xlsxPath)
 
   def sanitizeTableName(sheet: String): String =
     graft.xlsx.TypeInference.sanitizeNames(Seq(sheet)).head
@@ -100,22 +96,6 @@ object XlsxToDatabase {
     }
   }
 
-  /** Key-idempotent load — the missing third mode next to replace and
-    * append: rows whose key already exists are UPDATED (replaced), new
-    * keys are INSERTED, and re-running the same load is a no-op. The
-    * incremental-refresh semantics every recurring spreadsheet drop
-    * needs (replace loses history, append duplicates it).
-    *
-    * Scale shape: the DataFrame is written to a STAGING table through
-    * Spark's normal parallel JDBC sink (one writer per partition — the
-    * only part that scales with data volume), then the merge is ONE
-    * set-based transaction in the target database (DELETE … USING
-    * staging + INSERT … SELECT), so per-row logic never runs on the
-    * driver and the target table is never observable half-merged.
-    * Standard dialect SQL only — no PRIMARY KEY requirement on the
-    * target (DuckDB cannot ALTER one in later). Returns the number of
-    * rows staged for the merge (the frame's row count), which the
-    * staging write counts from its parquet footers — no second scan. */
   /** Test failpoint: invoked between the staging write and the merge —
     * the most dangerous instant of an upsert (parallel work done,
     * nothing committed). The crash-recovery spec points this at a
@@ -123,21 +103,40 @@ object XlsxToDatabase {
     * the end state survives the replay. Production never sets it. */
   private[graft] var interruptAfterStage: () => Unit = () => ()
 
+  /** Key-idempotent load — the missing third mode next to replace and
+    * append: rows whose key already exists are UPDATED (replaced), new
+    * keys are INSERTED, and re-running the same load is a no-op. The
+    * incremental-refresh semantics every recurring spreadsheet drop
+    * needs (replace loses history, append duplicates it).
+    *
+    * Scale shape: the DataFrame is staged by Spark's parallel writers
+    * (the only part that scales with data volume), then the merge is ONE
+    * set-based transaction in the target database (DELETE … USING
+    * staging + INSERT … SELECT), so per-row logic never runs on the
+    * driver and the target table is never observable half-merged. On
+    * DuckDB the stage is [[DuckDbBulkLoad]]'s parquet directory and the
+    * merge reads it directly (one connection, one statement section,
+    * one CHECKPOINT); elsewhere it is a per-run staging table written by
+    * Spark's JDBC sink and dropped afterwards. Standard dialect SQL only
+    * — no PRIMARY KEY requirement on the target (DuckDB cannot ALTER one
+    * in later). Returns the number of rows staged for the merge (the
+    * frame's row count; on DuckDB from the parquet footers — no second
+    * scan). */
   def upsert(df: DataFrame, jdbcUrl: String, table: String, keys: Seq[String],
              connectionProps: Properties = new Properties()): Long =
     try upsertOnce(df, jdbcUrl, table, keys, connectionProps)
     catch {
-      // Observed under load (flaky, ~1/500 suite runs): Spark's JDBC
-      // staging writer and this merge connection key DIFFERENT duckdb
-      // instances onto one file (instance cache keys on Properties); a
-      // best-effort CHECKPOINT racing the other instance's teardown can
-      // hit an already-removed .wal and FATALLY invalidate its instance
-      // — every later statement fails with "database has been
-      // invalidated". The poisoned instance unloads once its last
-      // connection closes (ours are closed by the time we're here) and
-      // a fresh open recovers the file cleanly, so for this
-      // key-idempotent merge the correct response is retry ONCE against
-      // a fresh instance, not failure.
+      // Observed under load (flaky, ~1/500 suite runs): two connections
+      // that key DIFFERENT duckdb instances onto one file (the instance
+      // cache keys on Properties — e.g. this merge's and a Spark JDBC
+      // reader's) race; a best-effort CHECKPOINT meeting the other
+      // instance's teardown can hit an already-removed .wal and FATALLY
+      // invalidate its instance — every later statement fails with
+      // "database has been invalidated". The poisoned instance unloads
+      // once its last connection closes (ours are closed by the time
+      // we're here) and a fresh open recovers the file cleanly, so for
+      // this key-idempotent merge the correct response is retry ONCE
+      // against a fresh instance, not failure.
       case e: java.sql.SQLException if invalidatedInstance(e) =>
         upsertOnce(df, jdbcUrl, table, keys, connectionProps)
     }
@@ -158,80 +157,61 @@ object XlsxToDatabase {
     require(keys.nonEmpty, "upsert requires at least one key column")
     val missing = keys.filterNot(df.columns.contains)
     require(missing.isEmpty, s"key column(s) not in data: ${missing.mkString(", ")}")
-    def q(id: String) = "\"" + id.replace("\"", "\"\"") + "\""
-    // per-run staging name: concurrent upserts into the same target must
-    // not clobber each other's staging data mid-merge (the merge itself
-    // serializes on the database's transaction layer)
-    val staging = table + "__upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // connection FIRST, staging write second: the finally below then owns
-    // staging cleanup on EVERY failure path (a staging write that died
-    // half-way still gets dropped; with per-run names a leak would
-    // otherwise accumulate one orphan table per failed run)
-    val conn = java.sql.DriverManager.getConnection(jdbcUrl, connectionProps)
-    try {
-      val st = conn.createStatement()
-      try {
-        val staged = DuckDbBulkLoad.write(df, jdbcUrl, staging, SaveMode.Overwrite, connectionProps)
-        interruptAfterStage()
-        // the merge runs under the database's statement lock, like every
-        // bulk-load statement (see DuckDbBulkLoad.serialized)
-        DuckDbBulkLoad.serialized(jdbcUrl) {
-          val exists = {
-            // base tables in the CURRENT schema only: a same-named view or a
-            // table in another schema must not flip this into the merge branch
-            val ps = conn.prepareStatement(
-              "SELECT count(*) FROM information_schema.tables " +
-                "WHERE table_name = ? AND table_schema = current_schema() " +
-                "AND table_type = 'BASE TABLE'")
-            ps.setString(1, table)
-            val rs = ps.executeQuery()
-            rs.next() && rs.getLong(1) > 0
-          }
-          // DISTINCT at merge time makes the upsert idempotent under
-          // DUPLICATE TASK ATTEMPTS, not just batch replays: a speculative
-          // or retried writer task commits its partition's rows into the
-          // staging table a second time (Spark's JDBC sink transacts per
-          // partition ATTEMPT — nothing dedups across attempts), and a
-          // plain INSERT…SELECT would forward those doubles into the
-          // target. Collapsing full-row duplicates is exactly the inverse
-          // of what attempt duplication produces (byte-identical rows);
-          // rows that differ in ANY column are preserved.
-          if (!exists) {
-            st.execute(s"CREATE TABLE ${q(table)} AS SELECT DISTINCT * FROM ${q(staging)}")
-          } else {
-            // IS NOT DISTINCT FROM: NULL keys must match themselves, or
-            // NULL-keyed rows re-insert on every run (idempotence breaks)
-            val keyEq = keys.map(k => s"t.${q(k)} IS NOT DISTINCT FROM s.${q(k)}")
-              .mkString(" AND ")
-            val cols = df.columns.map(q).mkString(", ")
-            conn.setAutoCommit(false)
-            try {
-              st.execute(s"DELETE FROM ${q(table)} t USING ${q(staging)} s WHERE $keyEq")
-              st.execute(s"INSERT INTO ${q(table)} ($cols) SELECT DISTINCT $cols FROM ${q(staging)}")
-              conn.commit()
-            } catch {
-              case e: Throwable => conn.rollback(); throw e
-            } finally conn.setAutoCommit(true)
-          }
-        }
-        staged
-      } finally DuckDbBulkLoad.serialized(jdbcUrl) {
-        // always drop staging — merge failure AND half-written staging
-        // alike (the write runs inside this try, so no failure path can
-        // orphan a per-run staging table)
-        try st.execute(s"DROP TABLE IF EXISTS ${q(staging)}")
-        catch { case _: java.sql.SQLException => () }
-        // flush the WAL into the database file before closing: a reader
-        // that reopens the file in the instant the last connection's
-        // instance tears down can otherwise attach to the pre-upsert
-        // snapshot (observed with duckdb_jdbc under load — the read saw
-        // an empty catalog). Best-effort: CHECKPOINT fails while another
-        // live transaction holds the WAL, which the statement lock rules
-        // out for this process's own writers.
-        try st.execute("CHECKPOINT")
-        catch { case _: java.sql.SQLException => () }
+    import DuckDbDialect.{quoteIdentifier => qid}
+    /** Merges the staged rows `src` into `table`; returns their count. */
+    def merge(st: java.sql.Statement, src: String): Long = {
+      interruptAfterStage()
+      // DISTINCT at merge time collapses full-row duplicates, so the
+      // upsert stays idempotent when the frame itself repeats rows and
+      // under DUPLICATE TASK ATTEMPTS on the generic JDBC path: a
+      // speculative or retried writer task commits its partition's rows
+      // into the staging TABLE a second time (Spark's JDBC sink transacts
+      // per partition ATTEMPT — nothing dedups across attempts). The
+      // parquet stage cannot hold such doubles: Spark's file committer
+      // publishes one attempt per task. Attempt duplication produces
+      // byte-identical rows; rows that differ in ANY column are preserved.
+      if (!DuckDbBulkLoad.tableExists(st, table)) {
+        st.execute(s"CREATE TABLE ${qid(table)} AS SELECT DISTINCT * FROM $src")
+      } else {
+        // IS NOT DISTINCT FROM: NULL keys must match themselves, or
+        // NULL-keyed rows re-insert on every run (idempotence breaks)
+        val keyEq = keys.map(k => s"t.${qid(k)} IS NOT DISTINCT FROM s.${qid(k)}")
+          .mkString(" AND ")
+        val cols = df.columns.map(qid).mkString(", ")
+        val conn = st.getConnection
+        conn.setAutoCommit(false)
+        try {
+          st.execute(s"DELETE FROM ${qid(table)} t USING $src s WHERE $keyEq")
+          st.execute(s"INSERT INTO ${qid(table)} ($cols) SELECT DISTINCT $cols FROM $src")
+          conn.commit()
+        } catch {
+          case e: Throwable => conn.rollback(); throw e
+        } finally conn.setAutoCommit(true)
       }
-    } finally conn.close()
+      DuckDbBulkLoad.rowCount(st, src)
+    }
+    if (DuckDbBulkLoad.supports(jdbcUrl))
+      DuckDbBulkLoad.staged(df, jdbcUrl, connectionProps)(merge)
+    else {
+      // per-run staging name: concurrent upserts into the same target must
+      // not clobber each other's staging data mid-merge. It goes into SQL
+      // RAW, as Spark's JDBC sink writes it into its CREATE TABLE, so the
+      // merge and the drop name the table the sink created on databases
+      // that fold unquoted identifiers.
+      val staging = table + "__upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      DuckDbBulkLoad.connected(jdbcUrl, connectionProps) { st =>
+        try {
+          df.write.jdbc(jdbcUrl, staging, connectionProps)
+          DuckDbBulkLoad.serialized(jdbcUrl)(merge(st, staging))
+        } finally {
+          // drop on every path: a merge failure and a half-written
+          // staging table alike (no IF EXISTS — not every dialect has it;
+          // a table the write never created just fails the drop)
+          try st.execute(s"DROP TABLE $staging")
+          catch { case _: java.sql.SQLException => () }
+        }
+      }
+    }
   }
 
   /** The CONTINUOUS form of the tool's identity: watch a directory for

@@ -13,11 +13,7 @@ object TypeInference {
   /** Inference result. Row skipping at SCAN time is driven entirely by
     * `XlsxDataSource.Opts` (headerRow/skipRows) in the reader — this
     * result carries only what the scan cannot re-derive per file. */
-  case class SheetSchema(
-      schema: StructType,
-      /** 0-based sheet-column index per schema field. */
-      colIndex: Array[Int],
-      date1904: Boolean)
+  case class SheetSchema(schema: StructType)
 
   /** Sanitize to a sql-friendly identifier; dedup with _2, _3… suffixes. */
   def sanitizeNames(raw: Seq[String]): Seq[String] = {
@@ -50,8 +46,7 @@ object TypeInference {
     * rows, then stops reading — rows past the sample are never parsed, so
     * inference costs the sample, not the sheet. */
   def infer(zip: ZipFile, partName: String, shared: Array[String],
-            dateStyle: Array[Boolean], date1904: Boolean,
-            headerRow: Boolean, inferTypes: Boolean,
+            dateStyle: Array[Boolean], headerRow: Boolean, inferTypes: Boolean,
             sampleRows: Int = 10000, skipRows: Int = 0): SheetSchema = {
     var header: Option[Array[(Int, CellValue)]] = None
     var maxCol = -1
@@ -107,7 +102,7 @@ object TypeInference {
     val names = sanitizeNames(rawNames)
     val types = (0 until nCols).map(i => if (inferTypes) stats(i).dataType else StringType)
     val schema = StructType(names.zip(types).map { case (n0, t) => StructField(n0, t, nullable = true) })
-    SheetSchema(schema, (0 until nCols).toArray, date1904)
+    SheetSchema(schema)
   }
 
   /** Convert a parsed cell to the target Spark type (null if incompatible

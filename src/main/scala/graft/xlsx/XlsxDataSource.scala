@@ -3,7 +3,6 @@ package graft.xlsx
 import java.util
 import java.util.zip.ZipFile
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -30,9 +29,8 @@ import scala.jdk.CollectionConverters._
   * Options: `sheet` (name), `sheetIndex` (0-based position, used when
   * `sheet` is absent; default = first sheet), `headerRow` (default
   * true), `inferSchema` (default true), `sampleRows` (default 10000),
-  * `columnar` (default true: decode into ColumnarBatches of 4096 rows;
-  * false forces the row-at-a-time reader), `mode` (PERMISSIVE default:
-  * malformed cells → null; FAILFAST: abort with row/column context),
+  * `mode` (PERMISSIVE default: malformed cells → null; FAILFAST: abort
+  * with row/column context),
   * `maxFilesPerTrigger` (streaming only: cap each micro-batch to N new
   * workbooks, like Spark's file sources; default unbounded),
   * `skipRows` (default 0: non-empty rows to discard BEFORE the header
@@ -100,7 +98,7 @@ class XlsxDataSource extends TableProvider with DataSourceRegister
 object XlsxDataSource {
   case class Opts(sheet: Option[String], sheetIndex: Option[Int],
                   headerRow: Boolean, inferTypes: Boolean, sampleRows: Int,
-                  columnar: Boolean, failFast: Boolean,
+                  failFast: Boolean,
                   maxFilesPerTrigger: Option[Int] = None,
                   skipRows: Int = 0)
 
@@ -110,7 +108,6 @@ object XlsxDataSource {
     o.getBoolean("headerRow", true),
     o.getBoolean("inferSchema", true),
     Option(o.get("sampleRows")).map(_.toInt).getOrElse(10000),
-    o.getBoolean("columnar", true),
     Option(o.get("mode")).map(_.toUpperCase).getOrElse("PERMISSIVE") match {
       case "FAILFAST" => true
       case "PERMISSIVE" => false
@@ -147,7 +144,7 @@ object XlsxDataSource {
       val wb = XlsxParser.parseWorkbook(zip)
       val sheet = resolveSheet(wb, o)
       TypeInference.infer(zip, sheet.partName, XlsxParser.parseSharedStrings(zip),
-        XlsxParser.parseDateStyles(zip), wb.date1904, o.headerRow, o.inferTypes,
+        XlsxParser.parseDateStyles(zip), o.headerRow, o.inferTypes,
         o.sampleRows, o.skipRows)
     } finally zip.close()
   }
@@ -435,27 +432,33 @@ class XlsxReaderFactory(fullSchema: StructType, required: StructType, o: XlsxDat
                         pushed: Array[org.apache.spark.sql.sources.Filter],
                         limit: Int = -1)
     extends PartitionReaderFactory {
+  /** All xlsx cell types map to vectorizable Spark types, so every scan
+    * reads columnar and the row reader is never asked for. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new XlsxPartitionReader(partition.asInstanceOf[XlsxInputPartition].path, fullSchema, required, o, pushed, limit)
-  /** All xlsx cell types map to vectorizable Spark types, so the batch
-    * path is always available; `columnar=false` opts out (debug/compare). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = o.columnar
+    throw new UnsupportedOperationException("xlsx scans are columnar-only")
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new XlsxColumnarReader(partition.asInstanceOf[XlsxInputPartition].path, fullSchema, required, o, pushed, limit)
 }
 
-/** Shared decode state for both read paths: pull-based parsing (one row
-  * on heap per task), header skipping, PERMISSIVE conversion, and
-  * pushed-filter evaluation. `nextValues` yields the next surviving data
-  * row's internal values, or null at end of sheet. */
-private[xlsx] abstract class XlsxReaderBase(path: String, fullSchema: StructType,
-    required: StructType, o: XlsxDataSource.Opts,
-    pushed: Array[org.apache.spark.sql.sources.Filter],
-    limit: Int = -1) extends AutoCloseable {
+/** The xlsx read path: pull-based parsing (one row on heap per task),
+  * header skipping, PERMISSIVE conversion and pushed-filter evaluation,
+  * with rows decoded into `OnHeapColumnVector` batches of 4096, so
+  * downstream operators consume `ColumnarBatch`es and Spark's
+  * ColumnarToRow/codegen machinery amortizes per-row overhead — the same
+  * contract the built-in parquet/ORC vectorized readers provide. Memory
+  * stays bounded: one batch per task, reset and refilled in place. */
+class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructType,
+                         o: XlsxDataSource.Opts,
+                         pushed: Array[org.apache.spark.sql.sources.Filter],
+                         limit: Int = -1)
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private var emitted = 0
 
-  protected val requiredIdx: Array[Int] = required.fields.map(f => fullSchema.fieldIndex(f.name))
+  private val requiredIdx: Array[Int] = required.fields.map(f => fullSchema.fieldIndex(f.name))
   private val wanted: Set[Int] = requiredIdx.toSet
   // only evaluate filters whose columns this scan actually reads
   private val fieldPos: Map[String, Int] = required.fieldNames.zipWithIndex.toMap
@@ -474,7 +477,12 @@ private[xlsx] abstract class XlsxReaderBase(path: String, fullSchema: StructType
   /** col → cell scratch buffer, reused across rows (see nextValues). */
   private val scratch = new Array[XlsxParser.CellValue](fullSchema.length)
 
-  protected def nextValues(): Array[Any] = {
+  private val capacity = 4096
+  private val vectors = OnHeapColumnVector.allocateColumns(capacity, required)
+  private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
+
+  /** The next surviving data row's internal values, or null at end of sheet. */
+  private def nextValues(): Array[Any] = {
     // pushed limit: stop decoding the stream once this partition has
     // produced enough rows (each file caps itself; Spark applies the
     // global limit across files)
@@ -532,43 +540,6 @@ private[xlsx] abstract class XlsxReaderBase(path: String, fullSchema: StructType
     null
   }
 
-  override def close(): Unit = { try rows.close() finally zip.close() }
-}
-
-/** Row-at-a-time read path (the DSv2 default). */
-class XlsxPartitionReader(path: String, fullSchema: StructType, required: StructType,
-                          o: XlsxDataSource.Opts,
-                          pushed: Array[org.apache.spark.sql.sources.Filter],
-                          limit: Int = -1)
-    extends XlsxReaderBase(path, fullSchema, required, o, pushed, limit)
-    with PartitionReader[InternalRow] {
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val v = nextValues()
-    if (v == null) false else { current = new GenericInternalRow(v); true }
-  }
-  override def get(): InternalRow = current
-}
-
-/** Vectorized read path: rows are decoded into `OnHeapColumnVector`
-  * batches of 4096, so downstream operators consume `ColumnarBatch`es
-  * and Spark's ColumnarToRow/codegen machinery amortizes per-row
-  * overhead — the same contract the built-in parquet/ORC vectorized
-  * readers provide. Memory stays bounded: one batch per task, reset and
-  * refilled in place. */
-class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructType,
-                         o: XlsxDataSource.Opts,
-                         pushed: Array[org.apache.spark.sql.sources.Filter],
-                         limit: Int = -1)
-    extends XlsxReaderBase(path, fullSchema, required, o, pushed, limit)
-    with PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val capacity = 4096
-  private val vectors = OnHeapColumnVector.allocateColumns(capacity, required)
-  private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
-
   override def next(): Boolean = {
     var n = 0
     vectors.foreach(_.reset())
@@ -595,5 +566,5 @@ class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructT
     n > 0
   }
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); super.close() }
+  override def close(): Unit = { try batch.close() finally try rows.close() finally zip.close() }
 }

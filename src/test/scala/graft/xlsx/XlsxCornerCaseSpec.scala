@@ -98,11 +98,6 @@ class XlsxCornerCaseSpec extends AnyFunSuite with Matchers {
     df.schema.fields(1).dataType.typeName shouldBe "double"   // inference saw data rows only
     val rows = df.collect().map(r => (r.getString(0), r.getDouble(1)))
     rows.toSeq.sortBy(_._1) shouldBe Seq(("bolt", 12.5), ("nut", 40.0))
-    // columnar=false row path applies the same skip
-    val rowPath = spark.read.format("xlsx").option("skipRows", 2)
-      .option("columnar", false).load(path)
-      .collect().map(r => (r.getString(0), r.getDouble(1)))
-    rowPath.toSeq.sortBy(_._1) shouldBe Seq(("bolt", 12.5), ("nut", 40.0))
     // skipRows=0 keeps today's behavior: the banner becomes the header
     spark.read.format("xlsx").load(path)
       .schema.fieldNames.head shouldBe "quarterly_report"
