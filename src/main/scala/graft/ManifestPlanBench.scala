@@ -17,8 +17,8 @@ import graft.operators.IndexManifest
   * [[IndexManifest.CheckpointInterval]]−1 DELTA commits (10 files
   * each: the steady-state appender shape), then times, min-of-`iters`:
   *
-  *  - '''manifest_read_ms''': [[IndexManifest.current]] — the full
-  *    resolution a reader pays per plan: one full-snapshot read +
+  *  - '''manifest_read_ms''': [[IndexManifest.resolveUncached]] — the
+  *    full resolution a cold reader pays: one full-snapshot read +
   *    checksum verify + parse of every entry + the delta-tail replay
   *    (the worst tail the checkpoint policy allows);
   *  - '''plan_range_ms''': [[IndexManifest.planRange]] over the parsed
@@ -128,28 +128,23 @@ object ManifestPlanBench {
     def minOf(body: => Unit): Double = (1 to iters).map(_ => timeMs(body)).min
 
     val expected = entries.size + deltaTail * deltaFiles
-    // memo OFF for the headline number: this bench exists to measure the
-    // honest read+checksum+parse cost a cold reader pays per plan (the
-    // r14 parsed-state memo would otherwise reduce it to a getFileStatus)
-    System.setProperty("graft.manifest.state.memo", "false")
     // warm-up parse (JIT + page cache) before timing
     val st = IndexManifest.current(fs, root).get
     require(st.files.size == expected, s"parsed ${st.files.size} entries, expected $expected")
 
+    // the headline number resolves UNCACHED: this bench exists to measure
+    // the honest read+checksum+parse cost a cold reader pays per plan (the
+    // r14 parsed-state memo would otherwise reduce it to a getFileStatus)
     val manifestReadMs = minOf {
-      val s = IndexManifest.current(fs, root).get
+      val s = IndexManifest.resolveUncached(fs, root, st.gen)
       require(s.files.size == expected)
     }
     // and the memo-served number alongside it: what every plan AFTER the
     // first pays within one application (a listing + one getFileStatus)
-    System.setProperty("graft.manifest.state.memo", "true")
     val manifestReadCachedMs = minOf {
       val s = IndexManifest.current(fs, root).get
       require(s.files.size == expected)
     }
-    // back OFF so the heap measurement below holds a genuinely SECOND
-    // parsed State, not the memo's shared instance
-    System.setProperty("graft.manifest.state.memo", "false")
     // 1% probe window in the middle of the id space
     val (lo, hi) = (baseSpan / 2, baseSpan / 2 + baseSpan / 100)
     val planMs = minOf {
@@ -179,7 +174,7 @@ object ManifestPlanBench {
         r.totalMemory - r.freeMemory
       }
       val before = used()
-      val held = IndexManifest.current(fs, root).get
+      val held = IndexManifest.resolveUncached(fs, root, st.gen)
       val after = used()
       require(held.files.size == expected)
       math.max(0.0, (after - before) / 1e6)

@@ -37,7 +37,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pass through a Repartition node (PushedFilters/ReadSchema pins
   * unchanged — PlanSpec), statistics propagate, and round-robin
   * repartition local-sorts its input (SPARK-23207) so task retries stay
-  * deterministic. Kill switch: `spark.graft.scan.fanout=false`.
+  * deterministic.
   */
 object Tables {
   /** Inferred-schema memo, keyed by absolute fixture path (r13
@@ -52,10 +52,8 @@ object Tables {
     * inference jobs. The data itself is always re-read from parquet.
     * Fixture inputs are immutable for a JVM's lifetime (read-only
     * testdata); anything the engine WRITES is read back through its own
-    * readers, never through this accessor. Kill switch:
-    * `spark.graft.schema.memo=false`. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * readers, never through this accessor. */
+  private val schemas = new Memo[String, org.apache.spark.sql.types.StructType]
 
   /** The session confs parquet schema INFERENCE depends on (r14, advisor
     * ask): two sessions in one JVM could legitimately infer different
@@ -77,25 +75,25 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (!spark.conf.get("spark.graft.schema.memo", "true").toBoolean)
-      return spark.read.parquet(path)
-    val key = inferenceKey(spark, path)
-    val known = schemaMemo.get(key)
-    if (known != null) spark.read.schema(known).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.put(key, df.schema)
-      df
-    }
+    val schema = schemas(inferenceKey(spark, path))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
+
+  private val maxes = new Memo[(String, String, String), Long]
+
+  /** `max(column)` of fixture table `name` under `dir`, one small job per
+    * JVM per (dir, table, column): the integer split points and id offsets
+    * the staged table-format trees derive from the fixture. */
+  def maxOf(spark: SparkSession, dir: String, name: String, column: String): Long =
+    maxes((dir, name, column)) {
+      t(spark, dir, name).agg(org.apache.spark.sql.functions.max(column)).head().getLong(0)
+    }
 
   /** Adaptive CPU fan-out for a scan-rooted relation whose downstream
     * per-row work is known heavy — see the object scaladoc. Sizing reads
     * the optimizer's own estimate (file size for a bare scan), so the
     * same call is a no-op wherever the scan already plans enough splits. */
   def wide(spark: SparkSession, df: DataFrame): DataFrame = {
-    val enabled = spark.conf.get("spark.graft.scan.fanout", "true").toBoolean
-    if (!enabled) return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val cores = spark.sparkContext.defaultParallelism
     val splitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(

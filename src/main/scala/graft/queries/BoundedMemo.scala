@@ -33,14 +33,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * localCheckpointed RDDs died with it) never serves stale handles.
   */
 object BoundedMemo {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val memo = new graft.Memo[String, DataFrame]
   @volatile private var currentApp: String = ""
 
-  /** Get-or-build. Plain get/putIfAbsent rather than computeIfAbsent:
-    * builds nest (a codebook build memo-reads the ranked sample), and
-    * ConcurrentHashMap forbids reentrant computeIfAbsent. A racing
-    * duplicate build computes identical values; one wins the publish
-    * and the loser's pinned checkpoint blocks are released. */
+  /** Get-or-build through [[graft.Memo]]: a concurrent caller of the same
+    * key waits for the one build, and a build may memo-read another key
+    * (a codebook build memo-reads the ranked sample). */
   def apply(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val app = s.sparkContext.applicationId
     // first access under a NEW application evicts the previous app's
@@ -50,28 +48,15 @@ object BoundedMemo {
     if (currentApp != app) synchronized {
       if (currentApp != app) {
         val prefix = app + "|"
-        cache.keySet.removeIf(k => !k.startsWith(prefix))
+        memo.removeIf(k => !k.startsWith(prefix))
         currentApp = app
       }
     }
-    val k = app + "|" + key
-    val hit = cache.get(k)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = cache.putIfAbsent(k, built)
-      if (prev != null) {
-        // the losing build's localCheckpoint pinned its own RDD blocks in
-        // executor storage; nothing will ever read them through the memo,
-        // so release them instead of leaking ≤2048-row blocks per race
-        // for the application lifetime. Guarded: only blocks the winner
-        // does NOT reference (a build that returns a caller-shared DF can
-        // surface the same plan from both racers).
-        if (built ne prev) unpersistLoser(built, prev)
-        prev
-      } else built
-    }
+    memo(app + "|" + key)(build)
   }
+
+  /** Entries held, for specs. */
+  private[queries] def size: Int = memo.size
 
   /** CORPUS-PIN variant: the same registry and app-eviction, explicitly
     * EXEMPT from the ≤2048-row rule — for n-row localCheckpoint pins a
@@ -86,16 +71,4 @@ object BoundedMemo {
     * bolted on for speed alone. */
   def corpusPin(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     apply(s, s"corpuspin|$key")(build)
-
-  private def leafRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectLeaves().collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
-
-  private def unpersistLoser(loser: DataFrame, winner: DataFrame): Unit =
-    try {
-      val keep = leafRdds(winner).map(_.id).toSet
-      leafRdds(loser).filterNot(r => keep(r.id))
-        .foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () } // release is best-effort hygiene
 }

@@ -2130,18 +2130,26 @@ object Llm extends QueryModule {
     val cent = centroidsDf(s, d)
     // coarse pick memo-shared by q201/q202 (r14, the same fuse as the
     // ivfadc family): a ≤k-row deterministic function of (fixture,
-    // step); the live step knob lands in the key
-    val stepKey = s.conf.getOption("spark.graft.ivf.step")
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_STEP")).getOrElse("sqrtk")
+    // step); the key is the EFFECTIVE step the pick uses, so spellings
+    // of one setting (" 10 " and "10"; unset and "abc") share an entry
+    val step = ivfStep(s)
+    val stepKey = step.fold("sqrtk")(_.toString)
     val coarse = BoundedMemo(s, s"coarserank|$d|$stepKey")(
-      defaultCoarseDf(s, cent).localCheckpoint())
+      defaultCoarseDf(cent, step).localCheckpoint())
     ivfProbe(s, d, cent, coarse, s"rank|$d|$stepKey")
   }
 
+  /** The `spark.graft.ivf.step` density knob as the coarse pick applies
+    * it: a positive integer, else None (every ceil(√k)-th centroid). */
+  private def ivfStep(s: SparkSession): Option[Long] =
+    s.conf.getOption("spark.graft.ivf.step")
+      .orElse(sys.env.get("SPARK_GRAFT_IVF_STEP")) // self-bench entry point
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ >= 1)
+
   /** The rank-based default coarse pick (clabel, cwec) used by q201/
-    * q202/q209 — every ceil(√k)-th centroid by label rank, with the
-    * `spark.graft.ivf.step` density knob. */
-  private def defaultCoarseDf(s: SparkSession, cent: DataFrame): DataFrame = {
+    * q202/q209 — every ceil(√k)-th centroid by label rank, or every
+    * `step`-th ([[ivfStep]]). */
+  private def defaultCoarseDf(cent: DataFrame, step: Option[Long]): DataFrame = {
     val centK = cent.agg(count(lit(1)).as("k"))
     // single-partition window over k centroid rows — bounded by k, the
     // same relation the exact path broadcasts whole
@@ -2158,13 +2166,10 @@ object Llm extends QueryModule {
     // restores it. The certificate is the gate that tells an operator
     // when to densify — and the k-means-trained quantizer (q206) is the
     // variant that needs no such hand-tuning.
-    val step: Column = s.conf.getOption("spark.graft.ivf.step")
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_STEP")) // self-bench entry point
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ >= 1)
-      .map(lit(_).cast("long"))
+    val every: Column = step.map(lit(_).cast("long"))
       .getOrElse(ceil(sqrt(col("k"))).cast("long"))
     ranked
-      .filter((col("rnr") - 1) % step === 0)
+      .filter((col("rnr") - 1) % every === 0)
       .select(col("label").cast("int").as("clabel"), col("cvec").as("cwec"))
   }
 
@@ -2467,14 +2472,6 @@ object Llm extends QueryModule {
     recallCertificate(s, d, trainedIvfAssignments(s, d))
   }
 
-  /** once-per-JVM staging for the persisted IVF index (q209) — same
-    * discipline as Sources: Bench's warm-up builds stage the export so
-    * timed runs measure the probe, Verify stages fresh per JVM.
-    * Cross-PROCESS staleness (a /tmp index left by an earlier JVM) is
-    * handled by the staging write itself: the set is empty in a fresh
-    * JVM, so the first run re-publishes with mode("overwrite"). */
-  private[queries] val ivfIndexStaged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** PERSISTED IVF index — the publish-once form of q201 (the S12/q131
     * pattern applied to the IVF cell assignment): centroids are written
     * ONCE partitioned by their coarse CELL (hive layout, sorted by label
@@ -2497,7 +2494,7 @@ object Llm extends QueryModule {
        |SELECT vec_id, true_label, cand AS assigned
        |FROM ivfasg WHERE rni = 1 AND vec_id < 200
        |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    persistedIvfIndexQuery(s, d, "ivf_index", defaultCoarseDf)
+    persistedIvfIndexQuery(s, d, "ivf_index", (s, cent) => defaultCoarseDf(cent, ivfStep(s)))
   }
 
   /** Shared build-once-probe-pruned body of q209 (rank coarse) and q213
@@ -2507,9 +2504,12 @@ object Llm extends QueryModule {
       coarseOf: (SparkSession, DataFrame) => DataFrame): DataFrame = {
     graft.functions.L2Micro.register(s)
     graft.functions.ArgminTop2L2Micro.register(s)
-    val sf = d.replaceAll("[^a-z0-9.]", "_")
-    val dir = s"/tmp/graft_llm/$sf/$sub"
-    if (ivfIndexStaged.add(dir)) {
+    // once-per-JVM staging, same discipline as Sources: Bench's warm-up
+    // builds stage the export so timed runs measure the probe; a fresh JVM
+    // re-publishes with mode("overwrite"), so a /tmp index left by an
+    // earlier process is never served stale
+    val dir = graft.Memo.stagingDir("llm", d, sub)
+    graft.Memo.stageOnce(dir) {
       // publish BOTH halves of the index: the cell-partitioned centroid
       // members AND the coarse centers. The probe below reads both from
       // disk — recomputing the coarse pick per probe batch would drag

@@ -46,24 +46,24 @@ object OptProbe {
   private def jobs(s: SparkSession, d: String, name: String): Unit = {
     import org.apache.spark.scheduler._
     val q = graft.QueryRegistry.all.find(_._1.startsWith(name)).get
-    val jobStart = scala.collection.concurrent.TrieMap[Int, (Long, String)]()
+    // listener event state (job id → start), not a cache
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     var log = List.empty[String]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobStart(j.jobId) = (System.nanoTime(),
-          Option(j.properties.getProperty("spark.job.description")).getOrElse(""))
+        jobStart.put(j.jobId, (System.nanoTime(),
+          Option(j.properties.getProperty("spark.job.description")).getOrElse("")))
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        jobStart.remove(j.jobId).foreach { case (t0, desc) =>
+        Option(jobStart.remove(j.jobId)).foreach { case (t0, desc) =>
           val ms = (System.nanoTime() - t0) / 1e6
-          log ::= f"[job] ${j.jobId}%4d ${ms}%9.1f ms  ${stages.remove(j.jobId).getOrElse("")} $desc"
+          log ::= f"[job] ${j.jobId}%4d ${ms}%9.1f ms  ${Option(stages.remove(j.jobId)).getOrElse("")} $desc"
         }
-      private val stages = scala.collection.concurrent.TrieMap[Int, String]()
+      private val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit = ()
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
-        val owner = jobStart.keys.toSeq.sorted.lastOption.getOrElse(-1)
-        val prev = stages.getOrElse(owner, "")
-        stages(owner) = prev + s"| ${si.name.takeWhile(_ != '\n').take(60)} n=${si.numTasks} "
+        val owner = jobStart.keySet.stream.mapToInt(_.intValue).max.orElse(-1)
+        stages.merge(owner, s"| ${si.name.takeWhile(_ != '\n').take(60)} n=${si.numTasks} ", _ + _)
       }
     }
     graft.GraftConf.scoped(s) { q._2.build(s, d).count() } // warm

@@ -461,11 +461,6 @@ object ScalePatterns extends QueryModule {
       .orderBy("o_orderkey")
   }
 
-  private def tmpDir(tag: String, sfDir: String): String = {
-    val sf = sfDir.replaceAll("[^a-z0-9.]", "_")
-    s"/tmp/graft_scale/$sf/$tag"
-  }
-
   /** BUCKETED co-located join — the zero-shuffle fact⋈fact shape. Both
     * sides are published ONCE as bucketed tables (8 buckets on the join
     * key, Murmur3 — `repartition(8, key)` first so every bucket is
@@ -495,14 +490,14 @@ object ScalePatterns extends QueryModule {
         .repartition(8, col("o_orderkey"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", tmpDir("b_orders", d)).saveAsTable(ot)
+        .option("path", graft.Memo.stagingDir("scale", d, "b_orders")).saveAsTable(ot)
     }
     if (!s.catalog.tableExists(lt)) {
       lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount")
         .repartition(8, col("l_orderkey"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", tmpDir("b_lineitem", d)).saveAsTable(lt)
+        .option("path", graft.Memo.stagingDir("scale", d, "b_lineitem")).saveAsTable(lt)
     }
     s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo.{stageOnce, stagingDir}
 import graft.Tables._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -13,28 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object Sources extends QueryModule {
 
-  private def tmpDir(tag: String, sfDir: String): String = {
-    val sf = sfDir.replaceAll("[^a-z0-9.]", "_")
-    s"/tmp/graft_sources/$sf/$tag"
-  }
-
-  /** Side-effect staging: each round-trip export runs once per JVM. Bench's
-    * unmeasured warm-up calls [[stage]], so the timed runs measure the SCAN
-    * alone, not the driver-side file export. Verify runs each query once per
-    * JVM, so its exports are always fresh. Keyed by target path → distinct
-    * scale factors stage independently. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, Unit]()
-  /** BLOCKING memo (`computeIfAbsent`): a concurrent caller of the same
-    * key waits for the winner's export to COMPLETE instead of reading a
-    * half-written file (the add-then-proceed race the round-12 advisor
-    * flagged on TableFormat's sibling pattern). A failed export retires
-    * its entry so a retry can re-stage. */
-  private def stageOnce(key: String)(write: => Unit): Unit =
-    try staged.computeIfAbsent(key, _ => write)
-    catch { case e: Throwable => staged.remove(key); throw e }
-
   /** Bench warm-up hook: pre-export every round-trip file (builders are
-    * eager about their side effects, so building once stages everything). */
+    * eager about their side effects, so building once stages everything).
+    * Each export runs once per JVM ([[graft.Memo.stageOnce]], keyed by
+    * target path, so distinct scale factors stage independently): the
+    * timed runs measure the SCAN alone, not the driver-side file export.
+    * Verify runs each query once per JVM, so its exports are always fresh. */
   def stage(s: SparkSession, d: String): Unit =
     queries.foreach { case (_, q) => q.build(s, d) }
 
@@ -44,7 +29,7 @@ object Sources extends QueryModule {
   val xlsxRegion: Q = Q(
     """SELECT CAST(r_regionkey AS DOUBLE) AS r_regionkey, r_name
       |FROM region ORDER BY r_regionkey""".stripMargin) { (s, d) =>
-    val path = tmpDir("region", d) + ".xlsx"
+    val path = stagingDir("sources", d, "region") + ".xlsx"
     stageOnce(path) {
       new java.io.File(path).getParentFile.mkdirs()
       graft.xlsx.XlsxWriter.writeDataFrame(region(s, d).orderBy("r_regionkey"), path, "region")
@@ -59,7 +44,7 @@ object Sources extends QueryModule {
     """SELECT CAST(n_nationkey AS DOUBLE) AS n_nationkey, n_name,
       |  CAST(n_regionkey AS DOUBLE) AS n_regionkey
       |FROM nation ORDER BY n_nationkey""".stripMargin) { (s, d) =>
-    val path = tmpDir("nation", d) + ".xlsx"
+    val path = stagingDir("sources", d, "nation") + ".xlsx"
     stageOnce(path) {
       new java.io.File(path).getParentFile.mkdirs()
       graft.xlsx.XlsxWriter.writeDataFrame(nation(s, d).orderBy("n_nationkey"), path, "nation")
@@ -73,7 +58,7 @@ object Sources extends QueryModule {
   val csvRoundtrip: Q = Q(
     """SELECT c_custkey, c_name, c_nationkey, CAST(c_acctbal AS DOUBLE) AS c_acctbal, c_mktsegment
       |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    val dir = tmpDir("customer_csv", d)
+    val dir = stagingDir("sources", d, "customer_csv")
     stageOnce(dir) {
       customer(s, d).write.mode("overwrite").option("header", true).csv(dir)
     }
@@ -88,7 +73,7 @@ object Sources extends QueryModule {
   val jsonRoundtrip: Q = Q(
     """SELECT s_suppkey, s_name, s_nationkey, CAST(s_acctbal AS DOUBLE) AS s_acctbal
       |FROM supplier ORDER BY s_suppkey""".stripMargin) { (s, d) =>
-    val dir = tmpDir("supplier_json", d)
+    val dir = stagingDir("sources", d, "supplier_json")
     stageOnce(dir) {
       supplier(s, d).write.mode("overwrite").json(dir)
     }
@@ -106,7 +91,7 @@ object Sources extends QueryModule {
   val jdbcEtl: Q = Q(
     """SELECT CAST(r_regionkey AS DOUBLE) AS r_regionkey, r_name
       |FROM region ORDER BY r_regionkey""".stripMargin) { (s, d) =>
-    val base = tmpDir("etl", d)
+    val base = stagingDir("sources", d, "etl")
     val db = s"$base/t.duckdb"
     stageOnce(db) {
       new java.io.File(base).mkdirs()
@@ -130,7 +115,7 @@ object Sources extends QueryModule {
     """SELECT CAST(c_custkey AS DOUBLE) AS c_custkey, c_name,
       |  CAST(c_acctbal AS DOUBLE) AS c_acctbal
       |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    val dir = tmpDir("customer_xlsx_sink", d)
+    val dir = stagingDir("sources", d, "customer_xlsx_sink")
     stageOnce(dir) {
       customer(s, d).select(col("c_custkey"), col("c_name"), col("c_acctbal"))
         .repartition(3)
@@ -153,7 +138,7 @@ object Sources extends QueryModule {
     """SELECT CAST(c_custkey AS DOUBLE) AS c_custkey, c_name,
       |  CAST(c_nationkey AS DOUBLE) AS c_nationkey
       |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    val dir = tmpDir("customer_multi", d)
+    val dir = stagingDir("sources", d, "customer_multi")
     stageOnce(dir) {
       new java.io.File(dir).mkdirs()
       val rows = customer(s, d).select("c_custkey", "c_name", "c_nationkey")
@@ -227,7 +212,7 @@ object Sources extends QueryModule {
     // Filter node left on the dim side the DPP rule sees no selective
     // predicate to prune with — exactly why this query stages the dim as
     // parquet (which is also what a star-schema dim is in production)
-    val dimDir = tmpDir("lang_dim", d)
+    val dimDir = stagingDir("sources", d, "lang_dim")
     stageOnce(dimDir) {
       Seq(("en", "germanic"), ("de", "germanic"), ("fr", "romance"),
         ("es", "romance"), ("zh", "sinitic")).toDF("lang", "family")
@@ -254,7 +239,7 @@ object Sources extends QueryModule {
     * path must serve byte-identical neighbors. */
   val annIndex: Q = Q(Llm.lshAnn.oracle.get) { (s, d) =>
     graft.functions.CosineSimilarity.register(s)
-    val dir = tmpDir("ann_index", d)
+    val dir = stagingDir("sources", d, "ann_index")
     stageOnce(dir) {
       embeddings(s, d)
         .select(col("vec_id"), col("embedding"), Llm.lshBucket("embedding").as("bucket"))
@@ -289,7 +274,7 @@ object Sources extends QueryModule {
   val orcRoundtrip: Q = Q(
     """SELECT p_partkey, p_name, p_brand, CAST(p_retailprice AS DOUBLE) AS p_retailprice
       |FROM part WHERE p_brand = 'Brand#13' ORDER BY p_partkey""".stripMargin) { (s, d) =>
-    val dir = tmpDir("part_orc", d)
+    val dir = stagingDir("sources", d, "part_orc")
     stageOnce(dir) {
       part(s, d).write.mode("overwrite").orc(dir)
     }
@@ -308,8 +293,8 @@ object Sources extends QueryModule {
   val compactedRead: Q = Q(
     """SELECT doc_id, lang, source, n_chars FROM documents
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val shattered = tmpDir("docs_shattered", d)
-    val compacted = tmpDir("docs_compacted", d)
+    val shattered = stagingDir("sources", d, "docs_shattered")
+    val compacted = stagingDir("sources", d, "docs_compacted")
     stageOnce(compacted) {
       documents(s, d).repartition(64)
         .write.mode("overwrite").parquet(shattered)
@@ -347,7 +332,7 @@ object Sources extends QueryModule {
       |UNION ALL
       |SELECT doc_id, lang, n_chars, 2 FROM documents WHERE doc_id % 2 = 1
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val dir = tmpDir("docs_evolved", d)
+    val dir = stagingDir("sources", d, "docs_evolved")
     stageOnce(dir) {
       documents(s, d).filter(col("doc_id") % 2 === 0)
         .select("doc_id", "lang")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo.{stageOnce, stagingDir}
 import graft.Tables
 import graft.operators.IndexManifest
 import graft.operators.IndexManifest.TableSpec
@@ -34,39 +35,21 @@ import org.apache.spark.sql.functions._
   */
 object TableFormat extends QueryModule {
 
-  /** Once-per-JVM staging with a BLOCKING memo: `computeIfAbsent` holds
-    * concurrent callers of the SAME dir until the winner's staging body
-    * completes (two queries sharing a tree — q259 and q262 both stage
-    * the delete tree — must never let the loser read a half-built
-    * tree, the round-12 advisor's race). A failed staging attempt
-    * removes its entry so a later call can retry instead of serving a
-    * permanently-poisoned dir. */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, Unit]()
-  private def stageOnce(dir: String)(body: => Unit): Unit =
-    try staged.computeIfAbsent(dir, _ => body)
-    catch { case e: Throwable => staged.remove(dir); throw e }
-
   private def wipe(s: SparkSession, dir: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
     root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
   }
 
-  private def sfKey(d: String): String = d.replaceAll("[^a-z0-9.]", "_")
-
   // ─── shared integer split points (identical arithmetic in both engines) ───
 
-  private val vecSplitCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private def vecB1(s: SparkSession, d: String): Long =
-    vecSplitCache.getOrElseUpdate(d,
-      (Tables.embeddings(s, d).agg(max("vec_id")).head().getLong(0) + 1) / 2)
+    (Tables.maxOf(s, d, "embeddings", "vec_id") + 1) / 2
   private val sqlVecB1 = "(SELECT (MAX(vec_id)+1)//2 FROM embeddings)"
 
-  private val docSplitCache = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-  private def docSplits(s: SparkSession, d: String): (Long, Long) =
-    docSplitCache.getOrElseUpdate(d, {
-      val mx = Tables.documents(s, d).agg(max("doc_id")).head().getLong(0)
-      ((mx + 1) / 2, (mx + 1) * 3 / 4)
-    })
+  private def docSplits(s: SparkSession, d: String): (Long, Long) = {
+    val mx = Tables.maxOf(s, d, "documents", "doc_id")
+    ((mx + 1) / 2, (mx + 1) * 3 / 4)
+  }
   private val sqlDocB1 = "(SELECT (MAX(doc_id)+1)//2 FROM documents)"
   private val sqlDocB2 = "(SELECT (MAX(doc_id)+1)*3//4 FROM documents)"
 
@@ -85,7 +68,7 @@ object TableFormat extends QueryModule {
     * carried forward ENTRY-IDENTICAL across the deletes (no rewrite —
     * the opposite of q258's copy-on-write, graded on the same engine). */
   private def stageDeleteTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_delete"
+    val dir = stagingDir("llm", d, "tableformat_delete")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -136,7 +119,7 @@ object TableFormat extends QueryModule {
     * files carry tight disjoint doc_id ranges (the layout zone maps
     * bite on). */
   private[queries] def stageCorpusTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_corpus"
+    val dir = stagingDir("llm", d, "tableformat_corpus")
     val (d1, d2) = docSplits(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -192,7 +175,7 @@ object TableFormat extends QueryModule {
     * the same commit. A structural require pins that the evolved
     * column is visible and the generation-1 schema is not polluted. */
   private def stageSchemaTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_schema"
+    val dir = stagingDir("llm", d, "tableformat_schema")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -273,10 +256,8 @@ object TableFormat extends QueryModule {
     * both engines with pure integer arithmetic so the inserted keys are
     * bit-identical. */
   private val sqlVecOff = "(SELECT MAX(vec_id)+1 FROM embeddings)"
-  private val vecOffCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private def vecOffExact(s: SparkSession, d: String): Long =
-    vecOffCache.getOrElseUpdate(d,
-      Tables.embeddings(s, d).agg(max("vec_id")).head().getLong(0) + 1)
+    Tables.maxOf(s, d, "embeddings", "vec_id") + 1
 
   /** Stage the q263 tree (once per JVM per sf dir): the full table
     * published at gen 1, then ONE manifest merge — updates (vec_id%11=3
@@ -287,7 +268,7 @@ object TableFormat extends QueryModule {
     * and the appended files (updates' new versions + inserts), with
     * every pre-merge file entry carried forward identical. */
   private def stageMergeTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_merge"
+    val dir = stagingDir("llm", d, "tableformat_merge")
     stageOnce(dir) {
       wipe(s, dir)
       IndexManifest.publishBase(s, delRows(s, d), s"$dir/t")
@@ -363,7 +344,7 @@ object TableFormat extends QueryModule {
     * current-generation schema is wide, generation 1 still reads with
     * its own narrow schema. */
   private def stageWidenTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_widen"
+    val dir = stagingDir("llm", d, "tableformat_widen")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -422,7 +403,7 @@ object TableFormat extends QueryModule {
     * bucket spec and every committed file name carries a parseable
     * bucket-id suffix. */
   private def stageBucketedPair(s: SparkSession, d: String): (String, String) = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_bucketed"
+    val dir = stagingDir("llm", d, "tableformat_bucketed")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -473,12 +454,10 @@ object TableFormat extends QueryModule {
 
   // ─────────────── q266: Z-ORDER multi-dimensional clustering ───────────────
 
-  private val charSplitCache = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-  private def charBounds(s: SparkSession, d: String): (Long, Long) =
-    charSplitCache.getOrElseUpdate(d, {
-      val mx = Tables.documents(s, d).agg(max("n_chars")).head().getLong(0)
-      (mx / 4, mx / 2)
-    })
+  private def charBounds(s: SparkSession, d: String): (Long, Long) = {
+    val mx = Tables.maxOf(s, d, "documents", "n_chars")
+    (mx / 4, mx / 2)
+  }
   private val sqlCharLo = "(SELECT MAX(n_chars)//4 FROM documents)"
   private val sqlCharHi = "(SELECT MAX(n_chars)//2 FROM documents)"
 
@@ -489,7 +468,7 @@ object TableFormat extends QueryModule {
     * claim on every grade: before the rewrite an n_chars probe skips
     * (essentially) nothing; after it, BOTH dimensions skip. */
   private def stageZorderTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_zorder"
+    val dir = stagingDir("llm", d, "tableformat_zorder")
     val (d1, d2) = docSplits(s, d)
     val (cLo, cHi) = charBounds(s, d)
     stageOnce(dir) {
@@ -549,7 +528,7 @@ object TableFormat extends QueryModule {
     * planning-time bloom pass must skip files, and the scan must be a
     * strict subset of the table. */
   private def stageBloomTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_bloom"
+    val dir = stagingDir("llm", d, "tableformat_bloom")
     stageOnce(dir) {
       wipe(s, dir)
       val docs = Tables.documents(s, d).select("doc_id", "lang", "source", "n_chars")
@@ -613,7 +592,7 @@ object TableFormat extends QueryModule {
     * a real Structured Streaming query, not a batch simulation. */
   private def stageCdcMirror(s: SparkSession, d: String): String = {
     val srcRoot = stageDeleteTree(s, d)
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_cdcstream"
+    val dir = stagingDir("llm", d, "tableformat_cdcstream")
     stageOnce(dir) {
       wipe(s, dir)
       val src = s"$srcRoot/t"; val dst = s"$dir/t"
@@ -672,7 +651,7 @@ object TableFormat extends QueryModule {
     * eras as one `length` column: the first two eras' files store the
     * column under its old physical name and resolve BY FIELD ID. */
   private def stageRenameTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_rename"
+    val dir = stagingDir("llm", d, "tableformat_rename")
     val (d1, d2) = docSplits(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -727,7 +706,7 @@ object TableFormat extends QueryModule {
     * timestamps must strictly increase, loud failure beats a wrong
     * grade on a pathological clock). */
   private def stageAsofTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_asof"
+    val dir = stagingDir("llm", d, "tableformat_asof")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -776,7 +755,7 @@ object TableFormat extends QueryModule {
     * clean batch appended. The graded read proves batch-atomicity of
     * enforcement: the final table is exactly base ∪ clean batch. */
   private def stageChecksTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_checks"
+    val dir = stagingDir("llm", d, "tableformat_checks")
     val b1 = vecB1(s, d)
     stageOnce(dir) {
       wipe(s, dir)
@@ -857,7 +836,7 @@ object TableFormat extends QueryModule {
     * RE-INTRODUCING the name — which gets a fresh field id, so the
     * pre-drop files' orphaned values must never resurrect. */
   private def stageDropTree(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_llm/${sfKey(d)}/tableformat_drop"
+    val dir = stagingDir("llm", d, "tableformat_drop")
     val (_, d2) = docSplits(s, d)
     stageOnce(dir) {
       wipe(s, dir)

@@ -1639,4 +1639,29 @@ class ManifestSpec extends AnyFunSuite with Matchers {
       spark.sparkContext.hadoopConfiguration)
     served() shouldBe rowsOf(batch(900, 11))
   }
+
+  test("parsed-state memo is bounded: a reader following a writer holds at most the cap") {
+    // a metadata-only tree with more generations than the memo holds,
+    // each resolved once, as a reader tailing an external writer does
+    val lruDir = "/tmp/graft_llm/manifest_spec/index_lru"
+    val root = new Path(lruDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(root, true)
+    def entry(g: Long) = IndexManifest.FileEntry(s"cell=0/ingest-w_$g-part-0.parquet", 1L, g, g)
+    IndexManifest.tryWriteManifest(fs, root, 1L, Seq(entry(1L)), Seq("w:1")) shouldBe true
+    val gens = IndexManifest.StateMemoCap + 16
+    (2 to gens).foreach { g =>
+      val prev = IndexManifest.resolveUncached(fs, root, g - 1L)
+      IndexManifest.tryWriteDeltaForBench(fs, root, prev, Seq(entry(g.toLong)),
+        Map("w" -> g.toLong)) shouldBe true
+    }
+    val first = IndexManifest.resolve(fs, root, 1L)
+    val states = (2 to gens).map(g => IndexManifest.resolve(fs, root, g.toLong))
+    IndexManifest.stateMemoSize shouldBe IndexManifest.StateMemoCap
+    states.last.files.size shouldBe gens
+    IndexManifest.resolve(fs, root, gens.toLong) should be theSameInstanceAs states.last
+    // the least recently used generation was evicted and re-parses
+    IndexManifest.resolve(fs, root, 1L) should not be theSameInstanceAs(first)
+    IndexManifest.stateMemoSize shouldBe IndexManifest.StateMemoCap
+  }
 }

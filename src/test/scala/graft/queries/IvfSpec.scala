@@ -33,6 +33,23 @@ class IvfSpec extends AnyFunSuite with Matchers {
     spark.conf.getOption("spark.graft.ivf.step") shouldBe None
   }
 
+  test("the coarse pick keys on the EFFECTIVE step: \" 10 \" after \"10\" is a memo hit") {
+    def build(step: String): Unit = GraftConf.scoped(spark) {
+      spark.conf.set("spark.graft.ivf.step", step)
+      SparkEntry.queries("q201_ivf_assign")(spark, sf)
+    }
+    build("10")
+    val held = BoundedMemo.size
+    build(" 10 ")
+    BoundedMemo.size shouldBe held
+    // unset and an unparseable value both mean the default pick
+    GraftConf.scoped(spark) { SparkEntry.queries("q201_ivf_assign")(spark, sf) }
+    val withDefault = BoundedMemo.size
+    build("abc")
+    build("0")
+    BoundedMemo.size shouldBe withDefault
+  }
+
   private def kmeansRecallRow(confs: (String, String)*) = GraftConf.scoped(spark) {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     SparkEntry.queries("q207_ivf_kmeans_recall")(spark, sf).head()
