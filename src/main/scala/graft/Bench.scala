@@ -96,9 +96,12 @@ object Bench {
   /** The full-detail JSON (every query's timing). Failed queries carry
     * -1 in `queries` and are EXCLUDED from `value` (a wall-time total
     * polluted by failure time would understate silently); `errors`
-    * makes the failure count a first-class field. */
+    * makes the failure count a first-class field. `slow_extra_iters` and
+    * `slow_sec` record the de-noising setting the timings were taken
+    * under (see [[timeQueries]]); -1 means not stated. */
   def renderJson(results: Seq[(String, Double)], iters: Int, sfDir: String,
-      calSec: Double = -1.0, calParSec: Double = -1.0, cpus: Int = -1): String = {
+      calSec: Double = -1.0, calParSec: Double = -1.0, cpus: Int = -1,
+      slowExtraIters: Int = -1, slowSec: Double = -1.0): String = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val ok = results.filter(_._2 >= 0)
@@ -106,6 +109,7 @@ object Bench {
     val nErr = results.count(_._2 < 0)
     s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"errors":$nErr,""" +
       s""""calibration_sec":$calSec,"calibration_par_sec":$calParSec,"cpus":$cpus,""" +
+      s""""slow_extra_iters":$slowExtraIters,"slow_sec":$slowSec,""" +
       s""""queries":$qs,"sf":"$sfDir"}"""
   }
 
@@ -121,7 +125,7 @@ object Bench {
     * it and written to bench_full.json. */
   def renderCompactJson(results: Seq[(String, Double)], iters: Int, sfDir: String,
       keep: Int = 40, calSec: Double = -1.0, calParSec: Double = -1.0,
-      cpus: Int = -1): String = {
+      cpus: Int = -1, slowExtraIters: Int = -1, slowSec: Double = -1.0): String = {
     def r3(v: Double) = math.rint(v * 1000) / 1000
     val ok = results.filter(_._2 >= 0)
     val total = if (ok.nonEmpty) r3(ok.map(_._2).sum) else 0.0
@@ -131,7 +135,8 @@ object Bench {
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"errors":$nErr,""" +
       s""""calibration_sec":${r3(calSec)},"calibration_par_sec":${r3(calParSec)},""" +
-      s""""cpus":$cpus,"queries_total":${results.size},""" +
+      s""""cpus":$cpus,"slow_extra_iters":$slowExtraIters,"slow_sec":${r3(slowSec)},""" +
+      s""""queries_total":${results.size},""" +
       s""""queries_shown":${slowest.size},"queries":$qs,"sf":"$sfDir"}"""
   }
 
@@ -200,7 +205,7 @@ object Bench {
       .filter(_ > 0).getOrElse(1.0)
     val results = timeQueries(spark, sfDir, selected, iters, slowExtra, slowSec)
     val nCpus = spark.sparkContext.defaultParallelism
-    val full = renderJson(results, iters, sfDir, calSec, calParSec, nCpus)
+    val full = renderJson(results, iters, sfDir, calSec, calParSec, nCpus, slowExtra, slowSec)
     // full map: printed first (for logs) and persisted for BASELINE.md.
     // SPARK_GRAFT_BENCH_TAG (e.g. "r7_close") additionally writes a
     // round-stamped bench_full_<tag>.json so per-close full maps survive
@@ -217,7 +222,7 @@ object Bench {
     // LAST line = the compact contract line that fits the driver's
     // 2000-char tail window (see renderCompactJson)
     println(renderCompactJson(results, iters, sfDir, calSec = calSec,
-      calParSec = calParSec, cpus = nCpus))
+      calParSec = calParSec, cpus = nCpus, slowExtraIters = slowExtra, slowSec = slowSec))
     spark.stop()
   }
 }

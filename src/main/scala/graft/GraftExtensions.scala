@@ -80,16 +80,14 @@ object GraftExtensions {
       e => functions.Sq8QuantizeMicro(e(0))),
     triple("argmin_l2_micro", classOf[functions.ArgminL2Micro],
       e => functions.ArgminL2Micro(e(0), e(1))),
-    triple("argmin2_l2_micro", classOf[functions.Argmin2L2Micro],
-      e => functions.Argmin2L2Micro(e(0), e(1))),
     triple("argmin_top2_l2_micro", classOf[functions.ArgminTop2L2Micro],
       e => functions.ArgminTop2L2Micro(e(0), e(1))),
     triple("argmin_pair_l2_micro", classOf[functions.ArgminPairL2Micro],
-      e => functions.ArgminPairL2Micro(e(0), e(1), e(2))),
+      e => functions.ArgminPairL2Micro(e(0), e(1), e(2), e(3))),
     triple("argmin_topn_l2_micro", classOf[functions.ArgminTopNL2Micro],
       e => functions.ArgminTopNL2Micro(e(0), e(1), e(2))),
     triple("argmin_struct_l2_micro", classOf[functions.ArgminStructL2Micro],
-      e => functions.ArgminStructL2Micro(e(0), e(1))),
+      e => functions.ArgminStructL2Micro(e(0), e(1), e(2))),
     triple("pq_adc_micro", classOf[functions.PqAdcMicro],
       e => functions.PqAdcMicro(e(0), e(1))),
     triple("pq_encode_micro", classOf[functions.PqEncodeMicro],

@@ -7,16 +7,15 @@ import org.apache.spark.sql.SparkSession
   * ×10/×100/×1000 self-bench (BASELINE.md decade tables), where the
   * interesting output is a metric ROW (e.g. q207's recall certificate)
   * rather than a timing total — Bench only counts, and Verify is the
-  * GRADING harness (it refuses live `SPARK_GRAFT_IVF_*` knobs because
-  * its oracle SQL is pinned to defaults). This probe is measurement,
-  * not grading: knobs are honored, nothing is compared.
+  * GRADING harness (it clears every `spark.graft.*` knob because its
+  * oracle SQL is pinned to defaults). This probe is measurement, not
+  * grading: knobs are honored, nothing is compared.
   *
   * Usage: runMain graft.ScaleProbe <name[,name...]> <sfDir> [maxRows=20] [passes=1] [k=v,...]
   *
   * The optional 5th argument sets session confs (e.g.
-  * `spark.graft.ivf.nprobe=4`) for the duration of the probe — the
-  * in-shell equivalent of the SPARK_GRAFT_* env knobs, which a warm
-  * sbt shell cannot vary per run.
+  * `spark.graft.ivf.nprobe=4`) for the duration of the probe, so a
+  * warm sbt shell can vary them per run.
   *
   * With passes > 1 each query is run that many times and the MIN wall
   * time is reported (the BASELINE.md min-of-2 methodology for the

@@ -3,113 +3,116 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Companion expressions for the IVF-pruned assignment (q201/q202):
+/** A candidate set decoded from its query constant: `ids(j)` is the
+  * j-th `cand`, `vecs(j)` its `cvec`. Public because generated code
+  * (outside `graft.functions`) reads it through [[ArgminL2Micro]]. */
+final class Cands(val ids: Array[Int], val vecs: Array[Array[Double]])
+
+object Cands {
+  /** Decodes an `array<struct<cand:int, cvec:array<double>>>` value;
+    * null stays null. */
+  def decode(v: Any): Cands = v match {
+    case null => null
+    case arr: ArrayData =>
+      val k = arr.numElements()
+      val ids = new Array[Int](k)
+      val vecs = new Array[Array[Double]](k)
+      var j = 0
+      while (j < k) {
+        val s = arr.getStruct(j, 2)
+        ids(j) = s.getInt(0)
+        vecs(j) = s.getArray(1).toDoubleArray()
+        j += 1
+      }
+      new Cands(ids, vecs)
+  }
+}
+
+/** The IVF members table decoded from its query constant
+  * `array<struct<cell:int, cands:array<struct<cand:int,
+  * cvec:array<double>>>>>`: cell ids sorted ascending, each with its
+  * member [[Cands]]. A cell id may appear once. */
+final class Members(cells: Array[Int], sets: Array[Cands]) {
+  /** The members of `cell`, or null when the table has no such cell. */
+  def of(cell: Int): Cands = {
+    val i = java.util.Arrays.binarySearch(cells, cell)
+    if (i < 0) null else sets(i)
+  }
+}
+
+object Members {
+  def decode(v: Any): Members = v match {
+    case null => null
+    case arr: ArrayData =>
+      val rows = (0 until arr.numElements()).map { x =>
+        val s = arr.getStruct(x, 2)
+        (s.getInt(0), Cands.decode(s.getArray(1)))
+      }.sortBy(_._1)
+      val cells = rows.map(_._1).toArray
+      require(cells.distinct.length == cells.length,
+        "members table lists a cell more than once")
+      new Members(cells, rows.map(_._2).toArray)
+  }
+}
+
+/** The IVF family on top of [[ArgminL2Micro]]:
   *
-  *  - [[Argmin2L2Micro]]  `argmin2_l2_micro(emb, cands) → int` — the
-  *    SECOND-best candidate under the (dist, cand) order (null when
-  *    fewer than 2 candidates). With [[ArgminL2Micro]] this yields the
-  *    top-2 coarse cells in two passes over the SAME broadcast array —
-  *    no per-row `filter(...)` higher-order function, which would
-  *    materialize a fresh √k-struct array copy for every probe row.
-  *  - [[ArgminPairL2Micro]]  `argmin_pair_l2_micro(emb, cands1, cands2)
-  *    → int` — the argmin over the UNION of two candidate arrays
-  *    (cands2 may be null = empty). Replaces a per-row
-  *    `concat(cands1, cands2)` that copied both cells' members for
-  *    every vector.
+  *  - [[ArgminTop2L2Micro]]   best and second-best candidate, one scan;
+  *  - [[ArgminTopNL2Micro]]   the n best candidates, one scan;
+  *  - [[ArgminPairL2Micro]]   argmin over the union of two cells' members;
+  *  - [[ArgminStructL2Micro]] argmin over one cell's members, with its
+  *    distance.
   *
   * Arithmetic is element-for-element identical to [[L2Micro]] /
   * [[ArgminL2Micro]] (±0.5-truncate micro rounding, left-to-right
   * accumulation, early exit against the current bound, ties toward the
-  * smaller cand), so all four expressions agree bit-for-bit with the
-  * oracle's `ROW_NUMBER() OVER (ORDER BY dist, cand)`.
+  * smaller cand), so all of them agree bit-for-bit with the oracle's
+  * `ROW_NUMBER() OVER (ORDER BY dist, cand)`.
   *
-  * Decode caching: unlike ArgminL2Micro's single broadcast-row call
-  * site, these see PER-ROW VARYING arrays (each row's cell membership
-  * arrives via a broadcast join, so consecutive rows reference
-  * different — but heavily repeated — backing buffers). A 1-entry cache
-  * would thrash; [[CandDecodeCache]] is a small direct-mapped table
-  * keyed by the same content fingerprint the ArgminL2Micro fix
-  * established (base, offset, numElements, sizeInBytes, head/mid/tail
-  * words), so the ~√k distinct cell arrays each occupy a slot and
-  * decode once per task. A collision or changed bytes just re-decodes —
-  * correctness never depends on the cache.
+  * Every candidate-side argument is a QUERY CONSTANT (a literal or an
+  * uncorrelated scalar subquery); analysis rejects one that references
+  * input columns ([[constantOnly]]). The pair and struct forms take the
+  * whole members table as that constant and index it by cell-id
+  * columns, so no per-row join carries member arrays. Each expression
+  * instance decodes its constant once into primitive arrays.
   *
-  * Both expressions are interpreted ([[CodegenFallback]]): the k·d
-  * multiply-add loop dominates per-row cost, and it runs on primitive
-  * arrays either way; fallback costs one boxed call per row.
+  * All are interpreted ([[CodegenFallback]]): the k·d multiply-add loop
+  * dominates per-row cost, and it runs on primitive arrays either way;
+  * fallback costs one boxed call per row.
   */
 private[functions] object MicroArgmin {
 
-  final val Slots = 256 // power of two; direct-mapped
-
-  /** Direct-mapped decode cache (one per expression instance per task —
-    * single-threaded by construction). */
-  final class CandDecodeCache {
-    private val bases = new Array[AnyRef](Slots)
-    private val offs = new Array[Long](Slots)
-    private val ks = new Array[Int](Slots)
-    private val sizes = new Array[Long](Slots)
-    private val heads = new Array[Long](Slots)
-    private val mids = new Array[Long](Slots)
-    private val tails = new Array[Long](Slots)
-    private val words = new Array[Array[Long]](Slots)
-    private val ids = new Array[Array[Int]](Slots)
-    private val vecs = new Array[Array[Array[Double]]](Slots)
-
-    def get(cands: ArrayData): (Array[Int], Array[Array[Double]]) = {
-      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      import org.apache.spark.unsafe.Platform
-      val k = cands.numElements()
-      val (base: AnyRef, off: Long, size: Long, head: Long, mid: Long, tail: Long) =
-        cands match {
-          case u: UnsafeArrayData =>
-            val b = u.getBaseObject; val o = u.getBaseOffset; val sz = u.getSizeInBytes.toLong
-            (b, o, sz, Platform.getLong(b, o),
-              Platform.getLong(b, o + (sz / 16) * 8), Platform.getLong(b, o + sz - 8))
-          case other => (other, 0L, -1L, 0L, 0L, 0L)
-        }
-      val slot = ((off ^ size ^ head ^ tail ^ k.toLong) & (Slots - 1)).toInt
-      // fingerprint hit → verify the region against the decode-time
-      // snapshot (MicroRegion): deterministic full compare ≤512 words;
-      // beyond that, strided probes per hit + a periodic full checksum
-      // bound stale-decode survival to FullEvery−1 rows (the sampled
-      // tier's honest residual — see MicroRegion). Non-Unsafe arrays
-      // (size == -1) key on object identity as before.
-      if ((bases(slot) eq base) && offs(slot) == off && ks(slot) == k &&
-          sizes(slot) == size && heads(slot) == head && mids(slot) == mid &&
-          tails(slot) == tail && ids(slot) != null &&
-          (size < 0 || MicroRegion.sameWords(base, off, size, words(slot))))
-        return (ids(slot), vecs(slot))
-      val is = new Array[Int](k)
-      val vs = new Array[Array[Double]](k)
-      var j = 0
-      while (j < k) {
-        val s = cands.getStruct(j, 2)
-        is(j) = s.getInt(0)
-        vs(j) = s.getArray(1).toDoubleArray()
-        j += 1
-      }
-      bases(slot) = base; offs(slot) = off; ks(slot) = k; sizes(slot) = size
-      heads(slot) = head; mids(slot) = mid; tails(slot) = tail
-      words(slot) = if (size >= 0) MicroRegion.snapshot(base, off, size) else null
-      ids(slot) = is; vecs(slot) = vs
-      (is, vs)
-    }
-  }
-
   val candType: DataType = ArrayType(StructType(Seq(
     StructField("cand", IntegerType), StructField("cvec", ArrayType(DoubleType)))))
+
+  val membersType: DataType = ArrayType(StructType(Seq(
+    StructField("cell", IntegerType), StructField("cands", candType))))
 
   def isCandType(dt: DataType): Boolean = dt match {
     case ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
                                     StructField(_, ArrayType(DoubleType, _), _, _))), _) => true
     case _ => false
   }
+
+  def isMembersType(dt: DataType): Boolean = dt match {
+    case ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
+                                    StructField(_, c, _, _))), _) => isCandType(c)
+    case _ => false
+  }
+
+  /** Success iff `arg` reads no input column: a literal or an
+    * uncorrelated scalar subquery. A correlated subquery references its
+    * outer columns and fails too. */
+  def constantOnly(fn: String, arg: Expression): TypeCheckResult =
+    if (arg.references.isEmpty) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fn: the candidate argument must be a query constant (a literal or an " +
+        s"uncorrelated scalar subquery), but ${arg.sql} reads input columns")
 
   /** emb floats → micro units, the exact ArgminL2Micro/L2Micro rounding. */
   def microRound(emb: ArrayData): Array[Double] = {
@@ -123,80 +126,45 @@ private[functions] object MicroArgmin {
     }
     ex
   }
-}
 
-/** SECOND-best candidate by (micro-L2 dist, cand) — null when fewer than
-  * two candidates survive. See [[MicroArgmin]] for semantics/caching. */
-case class Argmin2L2Micro(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  import MicroArgmin._
+  /** Best-so-far (dist, cand) under the family's order. */
+  final class Best {
+    var d: Double = Double.PositiveInfinity
+    var c: Int = Int.MaxValue
+    var found: Boolean = false
 
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), r) if isCandType(r) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"argmin2_l2_micro expects (array<float>, ${candType.sql}), " +
-        s"got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
-
-  @transient private lazy val cache = new CandDecodeCache
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val cands = b.asInstanceOf[ArrayData]
-    val k = cands.numElements()
-    if (k < 2) return null
-    val (ids, vecs) = cache.get(cands)
-    val ex = microRound(a.asInstanceOf[ArrayData])
-    val n = ex.length
-    // top-2 tracking under the (dist, cand) order; early exit against
-    // the SECOND bound (a candidate beaten by both slots cannot place)
-    var bd = Double.PositiveInfinity; var bc = Int.MaxValue; var bFound = false
-    var sd = Double.PositiveInfinity; var sc = Int.MaxValue; var sFound = false
-    var j = 0
-    while (j < k) {
-      val c = ids(j)
-      val cv = vecs(j)
-      val nn = math.min(n, cv.length)
-      var acc = 0.0
-      var i = 0
-      while (i < nn && acc <= sd) {
-        val d = ex(i) - cv(i)
-        acc += d * d
-        i += 1
-      }
-      if (i == nn) {
-        if (acc < bd || (acc == bd && c < bc)) {
-          sd = bd; sc = bc; sFound = bFound
-          bd = acc; bc = c; bFound = true
-        } else if (acc < sd || (acc == sd && c < sc)) {
-          sd = acc; sc = c; sFound = true
+    /** Folds every candidate of `cs` into the best-so-far, early-exiting
+      * each accumulation once it passes the current bound. */
+    def scan(ex: Array[Double], cs: Cands): Unit = {
+      val n = ex.length
+      val ids = cs.ids
+      val vecs = cs.vecs
+      var j = 0
+      while (j < ids.length) {
+        val cand = ids(j)
+        val cv = vecs(j)
+        val nn = math.min(n, cv.length)
+        var acc = 0.0
+        var i = 0
+        while (i < nn && acc <= d) {
+          val dd = ex(i) - cv(i)
+          acc += dd * dd
+          i += 1
         }
+        if (i == nn && (acc < d || (acc == d && cand < c))) {
+          d = acc; c = cand; found = true
+        }
+        j += 1
       }
-      j += 1
     }
-    if (sFound) sc else null
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Argmin2L2Micro =
-    copy(left = l, right = r)
-  override def prettyName: String = "argmin2_l2_micro"
-}
-
-object Argmin2L2Micro {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmin2_l2_micro", exprs => Argmin2L2Micro(exprs(0), exprs(1)), "built-in")
 }
 
 /** TOP-2 candidates by (micro-L2 dist, cand) in ONE scan —
   * `argmin_top2_l2_micro(emb, cands) → struct<c1:int, c2:int>` where
-  * c1 ≡ argmin_l2_micro and c2 ≡ argmin2_l2_micro (c2 null when fewer
-  * than 2 candidates; whole struct null when none). The IVF probe's
-  * coarse stage needs both: one fused pass halves its dominant cost at
-  * high cell counts vs calling the two single-result expressions.
-  * See [[MicroArgmin]] for arithmetic/caching. */
+  * c1 ≡ argmin_l2_micro and c2 is the second row of the (dist, cand)
+  * order (c2 null when fewer than 2 candidates; whole struct null when
+  * none). The IVF probe's coarse stage needs both. See [[MicroArgmin]]. */
 case class ArgminTop2L2Micro(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   import MicroArgmin._
@@ -207,25 +175,29 @@ case class ArgminTop2L2Micro(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), r) if isCandType(r) => TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(FloatType, _), r) if isCandType(r) => constantOnly(prettyName, right)
     case _ => TypeCheckResult.TypeCheckFailure(
       s"argmin_top2_l2_micro expects (array<float>, ${candType.sql}), " +
         s"got (${left.dataType.sql}, ${right.dataType.sql})")
   }
 
-  @transient private lazy val cache = new CandDecodeCache
+  @transient private lazy val cands: Cands = Cands.decode(right.eval(null))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val cands = b.asInstanceOf[ArrayData]
-    val k = cands.numElements()
-    if (k == 0) return null
-    val (ids, vecs) = cache.get(cands)
+  override def eval(input: InternalRow): Any = {
+    val cs = cands
+    if (cs == null || cs.ids.isEmpty) return null
+    val a = left.eval(input)
+    if (a == null) return null
     val ex = microRound(a.asInstanceOf[ArrayData])
     val n = ex.length
+    val ids = cs.ids
+    val vecs = cs.vecs
+    // top-2 tracking under the (dist, cand) order; early exit against
+    // the SECOND bound (a candidate beaten by both slots cannot place)
     var bd = Double.PositiveInfinity; var bc = Int.MaxValue; var bFound = false
     var sd = Double.PositiveInfinity; var sc = Int.MaxValue; var sFound = false
     var j = 0
-    while (j < k) {
+    while (j < ids.length) {
       val c = ids(j)
       val cv = vecs(j)
       val nn = math.min(n, cv.length)
@@ -261,71 +233,54 @@ object ArgminTop2L2Micro {
       "argmin_top2_l2_micro", exprs => ArgminTop2L2Micro(exprs(0), exprs(1)), "built-in")
 }
 
-/** Argmin over the UNION of two candidate arrays (second may be null =
-  * empty) — one scan, shared bound, no per-row concat. See
-  * [[MicroArgmin]]. */
-case class ArgminPairL2Micro(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+/** Argmin over the UNION of two cells' members —
+  * `argmin_pair_l2_micro(emb, members, cell1, cell2) → int`, one scan
+  * with a shared bound. `members` is the constant members table; a null
+  * or absent `cell2` adds nothing, so the scan covers `cell1` only. A
+  * `cell1` that is null or absent from the table yields null: callers
+  * drop such rows before the call (the IVF probe semi-joins `cell1`
+  * against the table's cells). See [[MicroArgmin]]. */
+case class ArgminPairL2Micro(first: Expression, second: Expression, third: Expression,
+    fourth: Expression) extends QuaternaryExpression with CodegenFallback {
   import MicroArgmin._
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), r1, r2) if isCandType(r1) && isCandType(r2) =>
-        TypeCheckResult.TypeCheckSuccess
+    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
+      case (ArrayType(FloatType, _), mt, IntegerType, IntegerType) if isMembersType(mt) =>
+        constantOnly(prettyName, second)
       case _ => TypeCheckResult.TypeCheckFailure(
-        s"argmin_pair_l2_micro expects (array<float>, ${candType.sql}, ${candType.sql}), " +
-          s"got (${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql})")
+        s"argmin_pair_l2_micro expects (array<float>, ${membersType.sql}, int, int), " +
+          s"got (${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql}, " +
+          s"${fourth.dataType.sql})")
     }
 
-  @transient private lazy val cache1 = new CandDecodeCache
-  @transient private lazy val cache2 = new CandDecodeCache
+  @transient private lazy val members: Members = Members.decode(second.eval(null))
 
-  // custom eval: a NULL second array means "no second cell" (left-join
-  // miss), not "result unknown" — TernaryExpression's null-safe default
-  // would return null for the whole row.
   override def eval(input: InternalRow): Any = {
+    val ms = members
+    if (ms == null) return null
     val embV = first.eval(input)
-    val c1V = second.eval(input)
-    if (embV == null || c1V == null) return null
-    val c2V = third.eval(input)
+    val cell1 = third.eval(input)
+    if (embV == null || cell1 == null) return null
+    val c1 = ms.of(cell1.asInstanceOf[Int])
+    if (c1 == null) return null
     val ex = microRound(embV.asInstanceOf[ArrayData])
-    val n = ex.length
-    var bd = Double.PositiveInfinity
-    var bc = Int.MaxValue
-    var found = false
-    def scan(cands: ArrayData, cache: CandDecodeCache): Unit = {
-      val k = cands.numElements()
-      if (k == 0) return
-      val (ids, vecs) = cache.get(cands)
-      var j = 0
-      while (j < k) {
-        val c = ids(j)
-        val cv = vecs(j)
-        val nn = math.min(n, cv.length)
-        var acc = 0.0
-        var i = 0
-        while (i < nn && acc <= bd) {
-          val d = ex(i) - cv(i)
-          acc += d * d
-          i += 1
-        }
-        if (i == nn && (acc < bd || (acc == bd && c < bc))) {
-          bd = acc; bc = c; found = true
-        }
-        j += 1
-      }
+    val best = new Best
+    best.scan(ex, c1)
+    val cell2 = fourth.eval(input)
+    if (cell2 != null) {
+      val c2 = ms.of(cell2.asInstanceOf[Int])
+      if (c2 != null) best.scan(ex, c2)
     }
-    scan(c1V.asInstanceOf[ArrayData], cache1)
-    if (c2V != null) scan(c2V.asInstanceOf[ArrayData], cache2)
-    if (found) bc else null
+    if (best.found) best.c else null
   }
 
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): ArgminPairL2Micro =
-    copy(first = f, second = s, third = t)
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression,
+      fo: Expression): ArgminPairL2Micro =
+    copy(first = f, second = s, third = t, fourth = fo)
   override def prettyName: String = "argmin_pair_l2_micro"
 }
 
@@ -333,18 +288,18 @@ object ArgminPairL2Micro {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "argmin_pair_l2_micro",
-      exprs => ArgminPairL2Micro(exprs(0), exprs(1), exprs(2)), "built-in")
+      exprs => ArgminPairL2Micro(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
 }
 
 /** TOP-N candidates by (micro-L2 dist, cand) in one scan —
   * `argmin_topn_l2_micro(emb, cands, n) → array<int>` (best-first, up to
   * n entries; empty candidates → null). Generalizes [[ArgminTop2L2Micro]]
   * for the `spark.graft.ivf.nprobe` operating knob: the probe stage
-  * explodes the returned cells and unions their members downstream. The
-  * early-exit bound is the CURRENT n-th best once the heap is full —
-  * same monotone-partial-sum argument as top-2. n is a foldable literal
-  * (the knob), small by construction; a simple insertion array beats a
-  * heap at these sizes. See [[MicroArgmin]] for arithmetic/caching. */
+  * explodes the returned cells. The early-exit bound is the CURRENT n-th
+  * best once the list is full — same monotone-partial-sum argument as
+  * top-2. n is a foldable literal (the knob), small by construction; a
+  * simple insertion array beats a heap at these sizes. See
+  * [[MicroArgmin]]. */
 case class ArgminTopNL2Micro(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
   import MicroArgmin._
@@ -355,22 +310,27 @@ case class ArgminTopNL2Micro(first: Expression, second: Expression, third: Expre
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
       case (ArrayType(FloatType, _), r, IntegerType) if isCandType(r) =>
-        if (third.foldable) TypeCheckResult.TypeCheckSuccess
+        if (third.foldable) constantOnly(prettyName, second)
         else TypeCheckResult.TypeCheckFailure("argmin_topn_l2_micro: n must be foldable")
       case _ => TypeCheckResult.TypeCheckFailure(
         s"argmin_topn_l2_micro expects (array<float>, ${candType.sql}, int), " +
           s"got (${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql})")
     }
 
-  @transient private lazy val cache = new CandDecodeCache
+  @transient private lazy val cands: Cands = Cands.decode(second.eval(null))
 
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val cands = b.asInstanceOf[ArrayData]
-    val k = cands.numElements()
-    val n = c.asInstanceOf[Int]
-    if (k == 0 || n <= 0) return null
-    val (ids, vecs) = cache.get(cands)
+  override def eval(input: InternalRow): Any = {
+    val cs = cands
+    if (cs == null || cs.ids.isEmpty) return null
+    val a = first.eval(input)
+    val nV = third.eval(input)
+    if (a == null || nV == null) return null
+    val n = nV.asInstanceOf[Int]
+    if (n <= 0) return null
     val ex = microRound(a.asInstanceOf[ArrayData])
+    val ids = cs.ids
+    val vecs = cs.vecs
+    val k = ids.length
     val dims = ex.length
     val cap = math.min(n, k)
     val topD = new Array[Double](cap)
@@ -421,15 +381,16 @@ object ArgminTopNL2Micro {
       exprs => ArgminTopNL2Micro(exprs(0), exprs(1), exprs(2)), "built-in")
 }
 
-/** Argmin WITH its distance —
-  * `argmin_struct_l2_micro(emb, cands) → struct<dist:double, cand:int>`
-  * (null on empty candidates). The general-nprobe probe path computes a
-  * per-(vector, probed-cell) best and reduces across cells with
+/** Argmin over one cell's members WITH its distance —
+  * `argmin_struct_l2_micro(emb, members, cell) → struct<dist:double,
+  * cand:int>`, null when `cell` is null or absent from the constant
+  * members table. The general-nprobe probe path computes a per-(vector,
+  * probed-cell) best and reduces across cells with
   * `min(struct(dist, cand))` — that aggregate needs the distance, which
   * [[ArgminL2Micro]] discards. Arithmetic identical to the family (see
   * [[MicroArgmin]]). */
-case class ArgminStructL2Micro(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+case class ArgminStructL2Micro(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with CodegenFallback {
   import MicroArgmin._
 
   override def dataType: DataType = StructType(Seq(
@@ -437,50 +398,38 @@ case class ArgminStructL2Micro(left: Expression, right: Expression)
     StructField("cand", IntegerType, nullable = false)))
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), r) if isCandType(r) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"argmin_struct_l2_micro expects (array<float>, ${candType.sql}), " +
-        s"got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
-
-  @transient private lazy val cache = new CandDecodeCache
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val cands = b.asInstanceOf[ArrayData]
-    val k = cands.numElements()
-    if (k == 0) return null
-    val (ids, vecs) = cache.get(cands)
-    val ex = microRound(a.asInstanceOf[ArrayData])
-    val n = ex.length
-    var bd = Double.PositiveInfinity; var bc = Int.MaxValue; var found = false
-    var j = 0
-    while (j < k) {
-      val c = ids(j)
-      val cv = vecs(j)
-      val nn = math.min(n, cv.length)
-      var acc = 0.0
-      var i = 0
-      while (i < nn && acc <= bd) {
-        val d = ex(i) - cv(i)
-        acc += d * d
-        i += 1
-      }
-      if (i == nn && (acc < bd || (acc == bd && c < bc))) {
-        bd = acc; bc = c; found = true
-      }
-      j += 1
+  override def checkInputDataTypes(): TypeCheckResult =
+    (first.dataType, second.dataType, third.dataType) match {
+      case (ArrayType(FloatType, _), mt, IntegerType) if isMembersType(mt) =>
+        constantOnly(prettyName, second)
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"argmin_struct_l2_micro expects (array<float>, ${membersType.sql}, int), " +
+          s"got (${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql})")
     }
-    if (found) InternalRow(bd, bc) else null
+
+  @transient private lazy val members: Members = Members.decode(second.eval(null))
+
+  override def eval(input: InternalRow): Any = {
+    val ms = members
+    if (ms == null) return null
+    val a = first.eval(input)
+    val cell = third.eval(input)
+    if (a == null || cell == null) return null
+    val cs = ms.of(cell.asInstanceOf[Int])
+    if (cs == null) return null
+    val best = new Best
+    best.scan(microRound(a.asInstanceOf[ArrayData]), cs)
+    if (best.found) InternalRow(best.d, best.c) else null
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArgminStructL2Micro =
-    copy(left = l, right = r)
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): ArgminStructL2Micro =
+    copy(first = f, second = s, third = t)
   override def prettyName: String = "argmin_struct_l2_micro"
 }
 
 object ArgminStructL2Micro {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmin_struct_l2_micro", exprs => ArgminStructL2Micro(exprs(0), exprs(1)), "built-in")
+      "argmin_struct_l2_micro", exprs => ArgminStructL2Micro(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -19,36 +20,38 @@ import org.apache.spark.sql.types._
   * `ORDER BY dist, cand LIMIT 1` bit-for-bit.
   *
   * Why an expression and not a plan: the straightforward shape —
-  * crossJoin the broadcast centroid relation, compute k distances per
-  * vector, reduce with an argmin aggregate — materializes n·k ROWS
-  * through the whole-stage pipeline. The per-row machinery (~µs) costs
-  * more than the 64 multiply-adds inside, and at the ×1000 self-bench
-  * (2M×10k) those 2·10¹⁰ rows dominated q99/q177 wall-clock even after
-  * the aggregation was made hash-based. Fusing the candidate loop into
-  * ONE expression evaluates n rows total; per row it:
+  * crossJoin the centroid relation, compute k distances per vector,
+  * reduce with an argmin aggregate — materializes n·k ROWS through the
+  * whole-stage pipeline. The per-row machinery (~µs) costs more than
+  * the 64 multiply-adds inside, and at the ×1000 self-bench (2M×10k)
+  * those 2·10¹⁰ rows dominated q99/q177 wall-clock even after the
+  * aggregation was made hash-based. Fusing the candidate loop into ONE
+  * expression evaluates n rows total; per row it:
   *   - pre-rounds the embedding's micro units once (the fan-out re-rounds
   *     them k times), and
   *   - early-exits each candidate's accumulation once it exceeds the
   *     best-so-far (monotone partial sums — cannot change the argmin).
   *
-  * Null: null inputs or an empty candidate array → null. The candidate
-  * array is scan-order-independent (explicit tie handling), so callers
-  * need not sort the collect_list.
+  * `cands` is a QUERY CONSTANT: a literal or an uncorrelated scalar
+  * subquery (`candsDf.scalar()`, `(SELECT collect_list(...) FROM ...)`
+  * in SQL). Analysis rejects a candidate argument that references input
+  * columns. Each expression instance decodes the constant once, from
+  * `right.eval`, into primitive arrays ([[Cands]]); no row is read to do
+  * it, so no decode can be stale.
+  *
+  * Null: a null embedding, a null constant or an empty candidate array
+  * → null. The candidate array is scan-order-independent (explicit tie
+  * handling), so callers need not sort the collect_list.
   */
 case class ArgminL2Micro(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
 
-  private val candType = ArrayType(StructType(Seq(
-    StructField("cand", IntegerType), StructField("cvec", ArrayType(DoubleType)))))
-
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _),
-          ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
-                                     StructField(_, ArrayType(DoubleType, _), _, _))), _)) =>
-      TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(FloatType | DoubleType, _), r) if MicroArgmin.isCandType(r) =>
+      MicroArgmin.constantOnly(prettyName, right)
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"argmin_l2_micro expects (array<float> | array<double>, ${candType.sql}), " +
+      s"argmin_l2_micro expects (array<float> | array<double>, ${MicroArgmin.candType.sql}), " +
         s"got (${left.dataType.sql}, ${right.dataType.sql})")
   }
 
@@ -63,220 +66,86 @@ case class ArgminL2Micro(left: Expression, right: Expression) extends BinaryExpr
 
   override def nullable: Boolean = true
 
-  /** Candidate-side decode cache. The candidate array arrives from one
-    * broadcast row; accessors hand out a FRESH UnsafeArrayData wrapper
-    * per call, but every wrapper points at the SAME backing bytes.
-    * (base, offset) alone is NOT a safe key: Spark reuses UnsafeRow
-    * backing buffers (shuffle-read UnsafeRowSerializer, sort iterators),
-    * so the same base+offset can later hold DIFFERENT candidate bytes.
-    * The key therefore also includes numElements, sizeInBytes, and a
-    * first/middle/last-word content fingerprint of the backing bytes —
-    * O(1) to check, and a buffer-reuse rewrite that survives every
-    * field is in practice a byte-identical candidate array (for which
-    * the cached decode is correct anyway). Non-Unsafe arrays key on
-    * object identity + numElements. A key miss just re-decodes: still
-    * correct, merely the un-memoized cost. One instance per task/codegen
-    * object — single-threaded by construction, transient for ser. */
-  @transient private var cachedBase: AnyRef = _
-  @transient private var cachedOff: Long = _
-  @transient private var cachedK: Int = -1
-  @transient private var cachedSize: Long = -1L
-  @transient private var cachedHead: Long = _
-  @transient private var cachedMid: Long = _
-  @transient private var cachedTail: Long = _
-  @transient private var cachedWords: Array[Long] = _
-  @transient private var cachedIds: Array[Int] = _
-  @transient private var cachedVecs: Array[Array[Double]] = _
+  /** The decoded candidate constant (null for a null constant). Public:
+    * the generated loop reads it through the expression reference. */
+  @transient lazy val cands: Cands = Cands.decode(right.eval(null))
 
-  private def decode(cands: ArrayData): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    import org.apache.spark.unsafe.Platform
-    val k = cands.numElements()
-    val (base: AnyRef, off: Long, size: Long, head: Long, mid: Long, tail: Long) = cands match {
-      case u: UnsafeArrayData =>
-        val b = u.getBaseObject; val o = u.getBaseOffset; val sz = u.getSizeInBytes.toLong
-        // sizeInBytes >= 8 always (numElements header word); middle word
-        // 8-aligned within the region
-        (b, o, sz, Platform.getLong(b, o),
-          Platform.getLong(b, o + (sz / 16) * 8), Platform.getLong(b, o + sz - 8))
-      case other => (other, 0L, -1L, 0L, 0L, 0L)
-    }
-    // fingerprint hit → verify the region against the decode-time
-    // snapshot (MicroRegion): deterministic full compare ≤512 words;
-    // beyond that, 128 strided probes per hit + a full checksum every
-    // FullEvery hits — a stale decode under buffer reuse is caught
-    // immediately for small regions and within ≤FullEvery−1 rows for
-    // large ones (the documented probabilistic residual of the sampled
-    // tier; see MicroRegion's class doc for the knobs and cost model).
-    if ((base eq cachedBase) && off == cachedOff && k == cachedK &&
-        size == cachedSize && head == cachedHead && mid == cachedMid &&
-        tail == cachedTail && cachedIds != null &&
-        (size < 0 || MicroRegion.sameWords(base, off, size, cachedWords))) return
-    val ids = new Array[Int](k)
-    val vecs = new Array[Array[Double]](k)
-    var j = 0
-    while (j < k) {
-      val s = cands.getStruct(j, 2)
-      ids(j) = s.getInt(0)
-      vecs(j) = s.getArray(1).toDoubleArray()
-      j += 1
-    }
-    cachedIds = ids; cachedVecs = vecs; cachedBase = base; cachedOff = off
-    cachedK = k; cachedSize = size; cachedHead = head; cachedMid = mid; cachedTail = tail
-    cachedWords = if (size >= 0) MicroRegion.snapshot(base, off, size) else null
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  override def eval(input: InternalRow): Any = {
+    val cs = cands
+    if (cs == null || cs.ids.isEmpty) return null
+    val a = left.eval(input)
+    if (a == null) return null
     val emb = a.asInstanceOf[ArrayData]
-    val cands = b.asInstanceOf[ArrayData]
-    val k = cands.numElements()
-    if (k == 0) return null
-    decode(cands)
-    val ids = cachedIds; val vecs = cachedVecs
-    val n = emb.numElements()
-    val ex = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      if (embPreScaled) ex(i) = emb.getDouble(i)
-      else {
-        val m = emb.getFloat(i).toDouble * 1000000.0
-        ex(i) = if (m >= 0) math.floor(m + 0.5) else math.ceil(m - 0.5)
-      }
-      i += 1
-    }
-    var bestD = Double.PositiveInfinity
-    var bestC = Int.MaxValue
-    var found = false
-    var j = 0
-    while (j < k) {
-      val c = ids(j)
-      val cv = vecs(j)
-      val nn = math.min(n, cv.length)
-      var acc = 0.0
-      var i2 = 0
-      while (i2 < nn && acc <= bestD) {
-        val d = ex(i2) - cv(i2)
-        acc += d * d
-        i2 += 1
-      }
-      if (i2 == nn && (acc < bestD || (acc == bestD && c < bestC))) {
-        bestD = acc; bestC = c; found = true
-      }
-      j += 1
-    }
-    if (found) bestC else null
+    val ex =
+      if (embPreScaled) emb.toDoubleArray() else MicroArgmin.microRound(emb)
+    val best = new MicroArgmin.Best
+    best.scan(ex, cs)
+    if (best.found) best.c else null
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // fingerprint-keyed decode cache + reusable micro buffer as
-      // codegen object state (one per task — single-threaded): the
-      // candidate broadcast row's backing bytes are the same for every
-      // stream row, so the struct/array accessor cost is paid once and
-      // the hot loop runs on primitive arrays. Key = (base, offset,
-      // numElements, sizeInBytes, first word, last word) — base+offset
-      // alone is unsafe because Spark reuses UnsafeRow buffers (see
-      // interpreted decode's comment).
-      val cachedBase = ctx.addMutableState("Object", "argminCachedBase")
-      val cachedOff = ctx.addMutableState("long", "argminCachedOff")
-      val cachedK = ctx.addMutableState("int", "argminCachedK", v => s"$v = -1;")
-      val cachedSize = ctx.addMutableState("long", "argminCachedSize", v => s"$v = -1L;")
-      val cachedHead = ctx.addMutableState("long", "argminCachedHead")
-      val cachedMid = ctx.addMutableState("long", "argminCachedMid")
-      val cachedTail = ctx.addMutableState("long", "argminCachedTail")
-      val cachedWords = ctx.addMutableState("long[]", "argminCachedWords")
-      val ids = ctx.addMutableState("int[]", "argminIds")
-      val vecs = ctx.addMutableState("double[][]", "argminVecs")
-      val exBuf = ctx.addMutableState("double[]", "argminEx")
-      val base = ctx.freshName("base")
-      val off = ctx.freshName("off")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val i2 = ctx.freshName("i2")
-      val m = ctx.freshName("m")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val cv = ctx.freshName("cv")
-      val nn = ctx.freshName("nn")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val bestD = ctx.freshName("bestD")
-      val bestC = ctx.freshName("bestC")
-      val found = ctx.freshName("found")
-      s"""
-         |int $k = $b.numElements();
-         |if ($k == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  Object $base = $b;
-         |  long $off = 0L;
-         |  long ${base}Size = -1L;
-         |  long ${base}Head = 0L;
-         |  long ${base}Mid = 0L;
-         |  long ${base}Tail = 0L;
-         |  if ($b instanceof org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) {
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData ${base}U =
-         |      (org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) $b;
-         |    $base = ${base}U.getBaseObject();
-         |    $off = ${base}U.getBaseOffset();
-         |    ${base}Size = (long) ${base}U.getSizeInBytes();
-         |    ${base}Head = org.apache.spark.unsafe.Platform.getLong($base, $off);
-         |    ${base}Mid = org.apache.spark.unsafe.Platform.getLong($base, $off + (${base}Size / 16L) * 8L);
-         |    ${base}Tail = org.apache.spark.unsafe.Platform.getLong($base, $off + ${base}Size - 8);
-         |  }
-         |  if ($base != $cachedBase || $off != $cachedOff || $k != $cachedK ||
-         |      ${base}Size != $cachedSize || ${base}Head != $cachedHead ||
-         |      ${base}Mid != $cachedMid || ${base}Tail != $cachedTail || $ids == null ||
-         |      (${base}Size >= 0 && !graft.functions.MicroRegion.sameWords(
-         |        $base, $off, ${base}Size, $cachedWords))) {
-         |    $ids = new int[$k];
-         |    $vecs = new double[$k][];
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      org.apache.spark.sql.catalyst.InternalRow $s = $b.getStruct($j, 2);
-         |      $ids[$j] = $s.getInt(0);
-         |      $vecs[$j] = $s.getArray(1).toDoubleArray();
-         |    }
-         |    $cachedBase = $base;
-         |    $cachedOff = $off;
-         |    $cachedK = $k;
-         |    $cachedSize = ${base}Size;
-         |    $cachedHead = ${base}Head;
-         |    $cachedMid = ${base}Mid;
-         |    $cachedTail = ${base}Tail;
-         |    $cachedWords = (${base}Size >= 0)
-         |      ? graft.functions.MicroRegion.snapshot($base, $off, ${base}Size) : null;
-         |  }
-         |  int $n = $a.numElements();
-         |  if ($exBuf == null || $exBuf.length < $n) $exBuf = new double[$n];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    ${if (embPreScaled) s"$exBuf[$i] = $a.getDouble($i);"
-            else
-              s"""double $m = ((double) $a.getFloat($i)) * 1000000.0;
-                 |    $exBuf[$i] = ($m >= 0) ? java.lang.Math.floor($m + 0.5) : java.lang.Math.ceil($m - 0.5);""".stripMargin}
-         |  }
-         |  double $bestD = Double.POSITIVE_INFINITY;
-         |  int $bestC = Integer.MAX_VALUE;
-         |  boolean $found = false;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    int $c = $ids[$j];
-         |    double[] $cv = $vecs[$j];
-         |    int $nn = java.lang.Math.min($n, $cv.length);
-         |    double $acc = 0.0;
-         |    int $i2 = 0;
-         |    for (; $i2 < $nn && $acc <= $bestD; $i2++) {
-         |      double $d = $exBuf[$i2] - $cv[$i2];
-         |      $acc += $d * $d;
-         |    }
-         |    if ($i2 == $nn && ($acc < $bestD || ($acc == $bestD && $c < $bestC))) {
-         |      $bestD = $acc; $bestC = $c; $found = true;
-         |    }
-         |  }
-         |  if ($found) { ${ev.value} = $bestC; } else { ${ev.isNull} = true; }
-         |}
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the constant is never generated as code: the loop reads the decoded
+    // arrays from this instance, which the executor decodes once
+    val self = ctx.addReferenceObj("argmin", this)
+    val exBuf = ctx.addMutableState("double[]", "argminEx")
+    val a = left.genCode(ctx)
+    val cs = ctx.freshName("cs")
+    val ids = ctx.freshName("ids")
+    val vecs = ctx.freshName("vecs")
+    val k = ctx.freshName("k")
+    val n = ctx.freshName("n")
+    val i = ctx.freshName("i")
+    val j = ctx.freshName("j")
+    val i2 = ctx.freshName("i2")
+    val m = ctx.freshName("m")
+    val c = ctx.freshName("c")
+    val cv = ctx.freshName("cv")
+    val nn = ctx.freshName("nn")
+    val acc = ctx.freshName("acc")
+    val d = ctx.freshName("d")
+    val bestD = ctx.freshName("bestD")
+    val bestC = ctx.freshName("bestC")
+    val found = ctx.freshName("found")
+    val load =
+      if (embPreScaled) s"$exBuf[$i] = ${a.value}.getDouble($i);"
+      else
+        s"""double $m = ((double) ${a.value}.getFloat($i)) * 1000000.0;
+           |      $exBuf[$i] = ($m >= 0) ? java.lang.Math.floor($m + 0.5) : java.lang.Math.ceil($m - 0.5);""".stripMargin
+    ev.copy(code = code"""
+       |${a.code}
+       |boolean ${ev.isNull} = true;
+       |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+       |graft.functions.Cands $cs = $self.cands();
+       |if (!${a.isNull} && $cs != null && $cs.ids().length > 0) {
+       |  int[] $ids = $cs.ids();
+       |  double[][] $vecs = $cs.vecs();
+       |  int $k = $ids.length;
+       |  int $n = ${a.value}.numElements();
+       |  if ($exBuf == null || $exBuf.length < $n) $exBuf = new double[$n];
+       |  for (int $i = 0; $i < $n; $i++) {
+       |    $load
+       |  }
+       |  double $bestD = Double.POSITIVE_INFINITY;
+       |  int $bestC = Integer.MAX_VALUE;
+       |  boolean $found = false;
+       |  for (int $j = 0; $j < $k; $j++) {
+       |    int $c = $ids[$j];
+       |    double[] $cv = $vecs[$j];
+       |    int $nn = java.lang.Math.min($n, $cv.length);
+       |    double $acc = 0.0;
+       |    int $i2 = 0;
+       |    for (; $i2 < $nn && $acc <= $bestD; $i2++) {
+       |      double $d = $exBuf[$i2] - $cv[$i2];
+       |      $acc += $d * $d;
+       |    }
+       |    if ($i2 == $nn && ($acc < $bestD || ($acc == $bestD && $c < $bestC))) {
+       |      $bestD = $acc; $bestC = $c; $found = true;
+       |    }
+       |  }
+       |  if ($found) { ${ev.isNull} = false; ${ev.value} = $bestC; }
+       |}
+       """.stripMargin)
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -18,23 +18,23 @@ import org.apache.spark.sql.types._
   *
   * `em` is a PRE-SCALED micro vector (integer-valued doubles — the
   * repo-wide exact bridge); `cbs` is the flattened per-subspace
-  * codebook riding ONE broadcast row. For each subspace j (ascending),
-  * the expression argmins the subvector `em[off_j .. off_j+d_j)`
-  * against that subspace's codewords — micro-L2 distance, ties toward
-  * the smaller code, element-for-element the arithmetic of the
-  * oracle's `ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY dist
-  * ASC, code ASC)` — and emits the selected code ids plus the
-  * concatenated reconstruction `dv` (the picked codewords, in
-  * subspace order).
+  * codebook, a QUERY CONSTANT (a literal or an uncorrelated scalar
+  * subquery — analysis rejects one that reads input columns). For each
+  * subspace j (ascending), the expression argmins the subvector
+  * `em[off_j .. off_j+d_j)` against that subspace's codewords —
+  * micro-L2 distance, ties toward the smaller code, element-for-element
+  * the arithmetic of the oracle's `ROW_NUMBER() OVER (PARTITION BY
+  * vec_id, j ORDER BY dist ASC, code ASC)` — and emits the selected
+  * code ids plus the concatenated reconstruction `dv` (the picked
+  * codewords, in subspace order).
   *
   * Why an expression: the HOF/`filter`+`aggregate` formulation
   * allocates per candidate per row; at 8 subspaces × 256 codewords
   * that is ~2k lambda frames per vector and was the allocation-bound
-  * shape of the ×100 self-bench. Here the codebook decodes ONCE into
-  * primitive arrays (fingerprint-keyed cache — same discipline as
-  * [[ArgminL2Micro]], tiered [[MicroRegion]] verify on hit), and the per-row loop
-  * is 8·256·8 multiply-adds with early exit against the subspace's
-  * best-so-far.
+  * shape of the ×100 self-bench. Here each expression instance decodes
+  * the constant codebook ONCE into primitive arrays ([[PqEncodeCore]]),
+  * and the per-row loop is 8·256·8 multiply-adds with early exit
+  * against the subspace's best-so-far.
   *
   * Subspace layout is derived from the codebook itself: offsets are
   * the prefix sums of each present subspace's codeword length (in
@@ -46,82 +46,26 @@ import org.apache.spark.sql.types._
   * k·d loop on primitive arrays dominates; fallback costs one boxed
   * call per row.
   *
-  * The decode cache + encode loop live in [[PqEncodeCore]] (one
+  * The decoded codebook + encode loop live in [[PqEncodeCore]] (one
   * instance per expression instance — single-threaded per task), so
   * the RESIDUAL variant [[PqEncodeShiftMicro]] shares them verbatim.
   */
-private[functions] final class PqEncodeCore {
+private[functions] final class PqEncodeCore(cbs: ArrayData) {
   // Decoded codebook, grouped by ascending subspace j:
   //   subJ(s)     — the subspace's j value (ascending)
   //   subDim(s)   — its codeword length d_j
   //   subCodes(s) — code ids, scan order
   //   subVecs(s)  — codewords, scan order
-  // Single-slot fingerprint cache (the codebook rides one broadcast
-  // row, identical bytes every stream row); tiered MicroRegion verify on hit.
-  private var cachedBase: AnyRef = _
-  private var cachedOff: Long = _
-  private var cachedK: Int = -1
-  private var cachedSize: Long = -1L
-  private var cachedHead: Long = _
-  private var cachedMid: Long = _
-  private var cachedTail: Long = _
-  private var cachedWords: Array[Long] = _
-  private var subJ: Array[Int] = _
-  private var subDim: Array[Int] = _
-  private var subCodes: Array[Array[Int]] = _
-  private var subVecs: Array[Array[Array[Double]]] = _
-  private var exBuf: Array[Double] = _
-
-  def decode(cbs: ArrayData): Unit = {
-    import org.apache.spark.unsafe.Platform
-    val k = cbs.numElements()
-    val (base: AnyRef, off: Long, size: Long, head: Long, mid: Long, tail: Long) = cbs match {
-      case u: UnsafeArrayData =>
-        val b = u.getBaseObject; val o = u.getBaseOffset; val sz = u.getSizeInBytes.toLong
-        (b, o, sz, Platform.getLong(b, o),
-          Platform.getLong(b, o + (sz / 16) * 8), Platform.getLong(b, o + sz - 8))
-      case other => (other, 0L, -1L, 0L, 0L, 0L)
-    }
-    if ((base eq cachedBase) && off == cachedOff && k == cachedK &&
-        size == cachedSize && head == cachedHead && mid == cachedMid &&
-        tail == cachedTail && subJ != null &&
-        (size < 0 || MicroRegion.sameWords(base, off, size, cachedWords))) return
-    val js = new Array[Int](k)
-    val cs = new Array[Int](k)
-    val ws = new Array[Array[Double]](k)
-    var x = 0
-    while (x < k) {
+  private val (subJ, subDim, subCodes, subVecs) = {
+    val entries = (0 until cbs.numElements()).map { x =>
       val s = cbs.getStruct(x, 3)
-      js(x) = s.getInt(0); cs(x) = s.getInt(1); ws(x) = s.getArray(2).toDoubleArray()
-      x += 1
+      (s.getInt(0), s.getInt(1), s.getArray(2).toDoubleArray())
     }
-    val distinctJ = js.distinct.sorted
-    val m = distinctJ.length
-    val sj = new Array[Int](m)
-    val sd = new Array[Int](m)
-    val sc = new Array[Array[Int]](m)
-    val sv = new Array[Array[Array[Double]]](m)
-    var g = 0
-    while (g < m) {
-      val jv = distinctJ(g)
-      var cnt = 0
-      var x2 = 0
-      while (x2 < k) { if (js(x2) == jv) cnt += 1; x2 += 1 }
-      val ci = new Array[Int](cnt)
-      val vi = new Array[Array[Double]](cnt)
-      var p = 0; x2 = 0
-      while (x2 < k) {
-        if (js(x2) == jv) { ci(p) = cs(x2); vi(p) = ws(x2); p += 1 }
-        x2 += 1
-      }
-      sj(g) = jv; sd(g) = if (cnt > 0) vi(0).length else 0; sc(g) = ci; sv(g) = vi
-      g += 1
-    }
-    subJ = sj; subDim = sd; subCodes = sc; subVecs = sv
-    cachedBase = base; cachedOff = off; cachedK = k; cachedSize = size
-    cachedHead = head; cachedMid = mid; cachedTail = tail
-    cachedWords = if (size >= 0) MicroRegion.snapshot(base, off, size) else null
+    val groups = entries.groupBy(_._1).toArray.sortBy(_._1)
+    (groups.map(_._1), groups.map(_._2.head._3.length),
+      groups.map(_._2.map(_._2).toArray), groups.map(_._2.map(_._3).toArray))
   }
+  private var exBuf: Array[Double] = _
 
   /** Load the input vector into the reused micro buffer: array<double>
     * embeddings are PRE-SCALED micro vectors copied as-is; array<float>
@@ -194,6 +138,12 @@ private[functions] final class PqEncodeCore {
 }
 
 private[functions] object PqEncodeCore {
+  /** The decoded codebook constant; null for a null or empty one. */
+  def decode(v: Any): PqEncodeCore = v match {
+    case cbs: ArrayData if cbs.numElements() > 0 => new PqEncodeCore(cbs)
+    case _ => null
+  }
+
   val outType: DataType = StructType(Seq(
     StructField("codes", ArrayType(IntegerType)),
     StructField("dv", ArrayType(DoubleType))))
@@ -217,7 +167,7 @@ case class PqEncodeMicro(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(DoubleType | FloatType, _), cb) if PqEncodeCore.cbTypeOk(cb) =>
-      TypeCheckResult.TypeCheckSuccess
+      MicroArgmin.constantOnly(prettyName, right)
     case _ => TypeCheckResult.TypeCheckFailure(
       s"pq_encode_micro expects (array<double> | array<float>, ${PqEncodeCore.cbType.sql}), " +
         s"got (${left.dataType.sql}, ${right.dataType.sql})")
@@ -230,15 +180,16 @@ case class PqEncodeMicro(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  @transient private lazy val core = new PqEncodeCore
+  @transient private lazy val core: PqEncodeCore = PqEncodeCore.decode(right.eval(null))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  override def eval(input: InternalRow): Any = {
+    val c = core
+    if (c == null) return null
+    val a = left.eval(input)
+    if (a == null) return null
     val emb = a.asInstanceOf[ArrayData]
-    val cbs = b.asInstanceOf[ArrayData]
-    if (cbs.numElements() == 0) return null
-    core.decode(cbs)
     val n = emb.numElements()
-    core.encode(core.loadMicro(emb, n, embPreScaled), n)
+    c.encode(c.loadMicro(emb, n, embPreScaled), n)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -281,7 +232,7 @@ case class PqEncodeShiftMicro(first: Expression, second: Expression, third: Expr
     (first.dataType, second.dataType, third.dataType) match {
       case (ArrayType(DoubleType | FloatType, _), ArrayType(DoubleType, _), cb)
           if PqEncodeCore.cbTypeOk(cb) =>
-        TypeCheckResult.TypeCheckSuccess
+        MicroArgmin.constantOnly(prettyName, third)
       case _ => TypeCheckResult.TypeCheckFailure(
         s"pq_encode_shift_micro expects (array<double> | array<float>, array<double>, " +
           s"${PqEncodeCore.cbType.sql}), got (${first.dataType.sql}, ${second.dataType.sql}, " +
@@ -295,16 +246,19 @@ case class PqEncodeShiftMicro(first: Expression, second: Expression, third: Expr
 
   override def nullable: Boolean = true
 
-  @transient private lazy val core = new PqEncodeCore
+  @transient private lazy val core: PqEncodeCore = PqEncodeCore.decode(third.eval(null))
 
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
+  override def eval(input: InternalRow): Any = {
+    val c = core
+    if (c == null) return null
+    val a = first.eval(input)
+    if (a == null) return null
+    val b = second.eval(input)
+    if (b == null) return null
     val emb = a.asInstanceOf[ArrayData]
     val shift = b.asInstanceOf[ArrayData]
-    val cbs = c.asInstanceOf[ArrayData]
-    if (cbs.numElements() == 0) return null
-    core.decode(cbs)
     val n = emb.numElements()
-    val ex = core.loadMicro(emb, n, embPreScaled)
+    val ex = c.loadMicro(emb, n, embPreScaled)
     val sn = shift.numElements()
     require(sn <= n,
       s"pq_encode_shift_micro: shift length $sn exceeds vector length $n " +
@@ -316,7 +270,7 @@ case class PqEncodeShiftMicro(first: Expression, second: Expression, third: Expr
           "(would silently encode garbage / drop the row from the index)")
       ex(i) -= shift.getDouble(i); i += 1
     }
-    core.encode(ex, n)
+    c.encode(ex, n)
   }
 
   override protected def withNewChildrenInternal(

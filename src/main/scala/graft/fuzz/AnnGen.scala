@@ -117,8 +117,8 @@ object AnnGen {
          |carr AS (SELECT collect_list(struct(cast(cid as int) AS cand, cvec)) AS cands FROM cent),
          |asg AS (
          |  SELECT c.vec_id % $c AS truec,
-         |    cast(argmin_l2_micro(c.em, cands) as bigint) AS assigned
-         |  FROM corpus c CROSS JOIN carr)
+         |    cast(argmin_l2_micro(c.em, (SELECT cands FROM carr)) as bigint) AS assigned
+         |  FROM corpus c)
          |SELECT truec, assigned, COUNT(*) AS n
          |FROM asg GROUP BY 1, 2
          |ORDER BY truec ASC, assigned ASC""".stripMargin
@@ -225,8 +225,8 @@ object AnnGen {
          |carr AS (SELECT collect_list(struct(cast(cid as int) AS cand, cvec)) AS cands FROM cent),
          |asg AS (
          |  SELECT v.vec_id, v.em,
-         |    cast(argmin_l2_micro(v.em, cands) as bigint) AS cell
-         |  FROM corpus v CROSS JOIN carr),
+         |    cast(argmin_l2_micro(v.em, (SELECT cands FROM carr)) as bigint) AS cell
+         |  FROM corpus v),
          |res AS (
          |  SELECT a.vec_id, a.cell, c.cvec,
          |    zip_with(a.em, c.cvec, (x, y) -> x - y) AS resid
@@ -486,8 +486,8 @@ object AnnGen {
          |  FROM range(${m * nc})),
          |cba AS (SELECT collect_list(struct(j, code, cw)) AS cbs FROM cb),
          |enc AS (
-         |  SELECT c.vec_id, pq_encode_shift_micro(c.em, s.shift, a.cbs).codes AS codes
-         |  FROM corpus c CROSS JOIN sh s CROSS JOIN cba a)
+         |  SELECT c.vec_id, pq_encode_shift_micro(c.em, s.shift, (SELECT cbs FROM cba)).codes AS codes
+         |  FROM corpus c CROSS JOIN sh s)
          |SELECT vec_id, cast(pos as int) AS j, code
          |FROM enc LATERAL VIEW posexplode(codes) x AS pos, code
          |ORDER BY vec_id, j""".stripMargin

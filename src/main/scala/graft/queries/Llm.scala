@@ -1920,6 +1920,12 @@ object Llm extends QueryModule {
         .localCheckpoint()
     }
 
+  /** `cent` (label, cvec) as one query constant for the fused argmins:
+    * an uncorrelated scalar subquery over its array<struct<cand, cvec>>
+    * collect_list, run once per query and decoded once per task. */
+  private[queries] def candidateConstant(cent: DataFrame): Column =
+    cent.agg(collect_list(struct(col("label").cast("int").as("cand"), col("cvec")))).scalar()
+
   /** Spark face of [[sqlAssignCtes]]: (vec_id, true_label, assigned). */
   private[queries] def centroidAssignments(s: SparkSession, d: String): DataFrame = {
     val cent = centroidsDf(s, d)
@@ -1935,11 +1941,12 @@ object Llm extends QueryModule {
     //     materializes n*k rows through the whole-stage pipeline --
     //     per-row machinery dominates the 64 multiply-adds inside
     //     (q99 714 s at x1000);
-    //  3. this: ALL centroids ride one broadcast row as an
-    //     array<struct<cand,cvec>>, and graft.functions.ArgminL2Micro
-    //     runs the k*d loop inside ONE codegen expression per vector --
-    //     n rows total, embedding micros pre-rounded once, per-candidate
-    //     early exit against the best-so-far.
+    //  3. this: ALL centroids are one query constant (a scalar
+    //     subquery over the array<struct<cand,cvec>> collect_list),
+    //     decoded once per task, and graft.functions.ArgminL2Micro runs
+    //     the k*d loop inside ONE codegen expression per vector -- n rows
+    //     total, embedding micros pre-rounded once, per-candidate early
+    //     exit against the best-so-far.
     // Tie order (dist, then cand) is explicit in the expression, so the
     // collect_list's nondeterministic order is irrelevant; arithmetic is
     // element-for-element identical to l2_micro (ArgminL2MicroSpec pins
@@ -1949,19 +1956,16 @@ object Llm extends QueryModule {
     // assigned IS NULL only on degenerate inputs (zero centroids, or a
     // NULL embedding — out of contract for the fixture tables). Guard
     // them UPSTREAM — a NULL-embedding filter pushed to the scan and a
-    // zero-row broadcast side — so the empty-centroid case matches the
-    // oracle's zero rows without a post-argmin IS NOT NULL filter:
-    // predicate pushdown would clone the argmin into the Filter node
-    // and run the whole k·d loop TWICE per row (measured 2× on the
-    // ×1000 self-bench across the entire assignment family).
-    val candsArr = cent.agg(
-      collect_list(struct(col("label").cast("int").as("cand"), col("cvec"))).as("cands"))
-      .filter(size(col("cands")) > 0)
+    // size(<the same constant>) > 0 filter on the stream side — so the
+    // empty-centroid case matches the oracle's zero rows without a
+    // post-argmin IS NOT NULL filter: predicate pushdown would clone the
+    // argmin into the Filter node and run the whole k·d loop TWICE per
+    // row (measured 2× on the ×1000 self-bench across the family).
+    val cands = candidateConstant(cent)
     embeddings(s, d)
-      .filter(col("embedding").isNotNull)
-      .crossJoin(broadcast(candsArr))
+      .filter(col("embedding").isNotNull && size(cands) > 0)
       .select(col("vec_id"), col("label").as("true_label"),
-        expr("argmin_l2_micro(embedding, cands)").as("assigned"))
+        call_function("argmin_l2_micro", col("embedding"), cands).as("assigned"))
   }
 
   val centroidAssign: Q = Q(
@@ -2120,9 +2124,10 @@ object Llm extends QueryModule {
     * IVF this variant is fully oracle-checkable; its approximation
     * ERROR is itself measured by q202 against the exact assignment.
     * Scale shape: coarse pick + cell membership are k-row relations
-    * (broadcast); the per-vector path is TWO fused expressions (top-2
-    * coarse scan + union-member argmin) and two broadcast joins on cell
-    * id — n rows, no shuffle beyond the final consumer aggregate.
+    * (query constants); the per-vector path is TWO fused expressions
+    * (top-2 coarse scan + union-member argmin) and one broadcast
+    * semi-join on cell id — n rows, no shuffle beyond the final
+    * consumer aggregate.
     * Measured ×1000 (2M×10k, BASELINE.md operating curve): default
     * 23.3 s vs brute 140.5 s (6×); perfect-recall setting 61.2 s
     * (2.3× with bit-exact parity to the brute assignment). */
@@ -2143,7 +2148,6 @@ object Llm extends QueryModule {
     * it: a positive integer, else None (every ceil(√k)-th centroid). */
   private def ivfStep(s: SparkSession): Option[Long] =
     s.conf.getOption("spark.graft.ivf.step")
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_STEP")) // self-bench entry point
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ >= 1)
 
   /** The rank-based default coarse pick (clabel, cwec) used by q201/
@@ -2265,14 +2269,6 @@ object Llm extends QueryModule {
     ivfProbe(s, d, cent, coarse, s"km|$d")
   }
 
-  /** Probe stage shared by the rank-picked (q201/q202) and trained
-    * (q206/q207) quantizers: assign each centroid to its nearest coarse
-    * cell, then each vector probes its nprobe nearest coarse cells and
-    * argmins over their members — Spark face of [[sqlIvfProbeTail]].
-    * `spark.graft.ivf.nprobe` (default 2, the graded/oracle setting)
-    * widens or narrows the probe; non-default values take the general
-    * explode-and-reduce shape (see below) and are spec-gated (IvfSpec),
-    * not oracle-gated — the Verify harness refuses live knobs. */
   /** centroid → its coarse cell: k×√k fan-out (bounded), double
     * arithmetic mirrored by the oracle's list_sum/list_transform;
     * struct-min = (dist ASC, clabel ASC) argmin. Shared by the inline
@@ -2285,9 +2281,17 @@ object Llm extends QueryModule {
       .agg(min(struct(col("dist"), col("clabel"))).as("m"))
       .select(col("label"), col("m.clabel").as("cell"))
 
+  /** Probe stage shared by the rank-picked (q201/q202) and trained
+    * (q206/q207) quantizers: assign each centroid to its nearest coarse
+    * cell, then each vector probes its nprobe nearest coarse cells and
+    * argmins over their members — Spark face of [[sqlIvfProbeTail]].
+    * `spark.graft.ivf.nprobe` (default 2, the graded/oracle setting)
+    * widens or narrows the probe; non-default values take the general
+    * explode-and-reduce shape (see [[probeCells]]) and are spec-gated
+    * (IvfSpec), not oracle-gated — Verify clears every `spark.graft.*`
+    * conf before it grades. */
   private def ivfProbe(s: SparkSession, d: String, cent: DataFrame, coarse: DataFrame,
       memoKey: String): DataFrame = {
-    graft.functions.ArgminL2Micro.register(s)
     // cell membership and the packed coarse array are ≤k-row
     // deterministic functions of (cent, coarse) — memo-shared by both
     // consumers of each coarse variant (q201/q202; q206/q207), r14.
@@ -2304,70 +2308,83 @@ object Llm extends QueryModule {
       coarse.agg(
         collect_list(struct(col("clabel").as("cand"), col("cwec").as("cvec"))).as("coarse_cands"))
         .localCheckpoint())
-    // MULTI-PROBE (nprobe=2): cell1/cell2 = best and second-best coarse
-    // cell from ONE fused top-2 scan over the broadcast array
-    // (ArgminTop2L2Micro — no per-row `filter(coarse_cands, ...)` HOF,
-    // which materialized a fresh √k-struct copy per probe row, and no
-    // second coarse pass). One probe alone leaves boundary
-    // vectors in the wrong cell (~0.6 recall on the fixture); the
-    // second probe is the standard IVF recovery and the oracle mirrors
-    // it with rnv <= 2. The final argmin scans the UNION of both cells'
-    // members in one expression (ArgminPairL2Micro) — no per-row
-    // concat; the per-cell arrays arrive via broadcast joins and decode
-    // once per task through the N-way fingerprint cache. First measured
-    // shape (HOF filter + concat, 1-entry cache): 42.2 s at ×1000 —
-    // allocation-bound, not compute-bound.
-    graft.functions.ArgminTop2L2Micro.register(s)
-    graft.functions.ArgminPairL2Micro.register(s)
     val nprobe: Int = s.conf.getOption("spark.graft.ivf.nprobe")
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_NPROBE")) // self-bench entry point
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1)
       .getOrElse(2)
+    probeCells(s, embeddings(s, d), coarseArr, cellMembers, nprobe)
+  }
+
+  /** (vec_id, true_label, assigned) for `emb` (vec_id, label, embedding)
+    * probing its `nprobe` nearest coarse cells. `coarseArr` is the 1-row
+    * coarse candidate array (`coarse_cands`), `cellMembers` the (cell,
+    * cands) member lists. Both enter the fused argmins as query
+    * constants — the coarse array as is, the members as ONE table
+    * `array<struct<cell, cands>>` that the argmins index by cell id — so
+    * no per-row join carries candidate arrays. A vector whose nearest
+    * cell has no members drops out (a semi-join on the cell ids), as in
+    * the oracle's inner join; a memberless or absent second cell adds
+    * nothing. */
+  private[graft] def probeCells(s: SparkSession, emb: DataFrame, coarseArr: DataFrame,
+      cellMembers: DataFrame, nprobe: Int): DataFrame = {
+    graft.functions.ArgminTop2L2Micro.register(s)
+    graft.functions.ArgminPairL2Micro.register(s)
+    graft.functions.ArgminTopNL2Micro.register(s)
+    graft.functions.ArgminStructL2Micro.register(s)
+    val coarseCands = coarseArr.select(col("coarse_cands")).scalar()
+    val members = cellMembers
+      .agg(collect_list(struct(col("cell").cast("int").as("cell"), col("cands")))).scalar()
+    val memberCells = broadcast(cellMembers.select(col("cell").cast("int").as("cell")))
     if (nprobe != 2) {
       // GENERAL nprobe shape: one fused top-N coarse scan → explode the
-      // ≤nprobe probed cells → broadcast-join each cell's members → one
+      // ≤nprobe probed cells → keep the cells that have members → one
       // fused per-(vector, cell) argmin WITH distance → reduce across
       // cells with min(struct(dist, cand)). Costs one n·nprobe-row
       // aggregate the nprobe=2 pair shape avoids — the knob path trades
       // that shuffle for probe width.
-      graft.functions.ArgminTopNL2Micro.register(s)
-      graft.functions.ArgminStructL2Micro.register(s)
-      return embeddings(s, d)
-        .crossJoin(broadcast(coarseArr))
+      return emb
         .select(col("vec_id"), col("label").as("true_label"), col("embedding"),
-          explode(expr(s"argmin_topn_l2_micro(embedding, coarse_cands, $nprobe)")).as("cell"))
-        .join(broadcast(cellMembers), Seq("cell"))
+          explode(call_function("argmin_topn_l2_micro", col("embedding"), coarseCands,
+            lit(nprobe))).as("cell"))
+        .join(memberCells, Seq("cell"), "left_semi")
         .select(col("vec_id"), col("true_label"),
-          expr("argmin_struct_l2_micro(embedding, cands)").as("bs"))
+          call_function("argmin_struct_l2_micro", col("embedding"), members, col("cell")).as("bs"))
         // no IS NOT NULL post-filter (pushdown would clone the fused
         // argmin into the Filter — 2× the k·d loop): bs is non-null by
         // construction here — a NULL embedding yields a null probe
-        // array whose explode emits no row, and cands comes from the
-        // inner cellMembers join (collect_list groups are non-empty)
+        // array whose explode emits no row, and the semi-join keeps
+        // only cells with members
         .groupBy(col("vec_id"), col("true_label"))
         .agg(min(struct(col("bs.dist"), col("bs.cand"))).as("m"))
         .select(col("vec_id"), col("true_label"), col("m.cand").as("assigned"))
     }
-    val m1 = cellMembers.select(col("cell").as("cell1"), col("cands").as("cands1"))
-    val m2 = cellMembers.select(col("cell").as("cell2"), col("cands").as("cands2"))
-    embeddings(s, d)
-      .crossJoin(broadcast(coarseArr))
+    // MULTI-PROBE (nprobe=2): cell1/cell2 = best and second-best coarse
+    // cell from ONE fused top-2 scan over the coarse constant
+    // (ArgminTop2L2Micro — no per-row `filter(coarse_cands, ...)` HOF,
+    // which materialized a fresh √k-struct copy per probe row, and no
+    // second coarse pass). One probe alone leaves boundary vectors in
+    // the wrong cell (~0.6 recall on the fixture); the second probe is
+    // the standard IVF recovery and the oracle mirrors it with
+    // rnv <= 2. The final argmin scans the UNION of both cells' members
+    // in one expression (ArgminPairL2Micro) — no per-row concat, no
+    // per-row member arrays. First measured shape (HOF filter + concat):
+    // 42.2 s at ×1000 — allocation-bound, not compute-bound.
+    emb
       .select(col("vec_id"), col("label").as("true_label"), col("embedding"),
-        expr("argmin_top2_l2_micro(embedding, coarse_cands)").as("t2"))
+        call_function("argmin_top2_l2_micro", col("embedding"), coarseCands).as("t2"))
       .select(col("vec_id"), col("true_label"), col("embedding"),
         col("t2.c1").as("cell1"), col("t2.c2").as("cell2"))
-      .join(broadcast(m1), Seq("cell1"))
-      // left: the 2nd cell can be absent (k so small there is only one
-      // coarse cell) or memberless (duplicate coarse centroids) — then
-      // the probe set is just cell1's members, as in the oracle
-      .join(broadcast(m2), Seq("cell2"), "left")
+      // null-safe key: an equi-join on cell1 makes the optimizer infer
+      // isnotnull(cell1), which pushdown rewrites into a SECOND top-2
+      // scan per row; a null cell1 still matches no member cell
+      .join(memberCells, col("cell1") <=> col("cell"), "left_semi")
       .select(col("vec_id"), col("true_label"),
-        expr("argmin_pair_l2_micro(embedding, cands1, cands2)").as("assigned"))
+        call_function("argmin_pair_l2_micro", col("embedding"), members,
+          col("cell1"), col("cell2")).as("assigned"))
     // no post-argmin IS NOT NULL filter: pushdown clones the argmin
     // into the Filter (2× the k·d loop per row). assigned is non-null
     // by construction here — a NULL embedding (or empty coarse set)
-    // nulls t2 and the row drops at the cell1 inner join, and cands1
-    // comes from that inner join on non-empty member lists.
+    // nulls t2 and the row drops at the cell1 semi-join, which keeps
+    // only cells with non-empty member lists.
   }
 
   val ivfAssign: Q = Q(
@@ -2526,12 +2543,11 @@ object Llm extends QueryModule {
       coarse.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
     }
     val idx = s.read.parquet(s"$dir/members")
-    val coarseArr = s.read.parquet(s"$dir/coarse").agg(
-      collect_list(struct(col("clabel").as("cand"), col("cwec").as("cvec"))).as("coarse_cands"))
+    val coarseCands = s.read.parquet(s"$dir/coarse").agg(
+      collect_list(struct(col("clabel").as("cand"), col("cwec").as("cvec")))).scalar()
     val probes = embeddings(s, d).filter(col("vec_id") < 200)
-      .crossJoin(broadcast(coarseArr))
       .select(col("vec_id"), col("label").as("true_label"), col("embedding"),
-        expr("argmin_top2_l2_micro(embedding, coarse_cands)").as("t2"))
+        call_function("argmin_top2_l2_micro", col("embedding"), coarseCands).as("t2"))
       // c2 is null when only one coarse cell exists; a memberless probed
       // cell simply contributes no index rows — both match the oracle's
       // union-of-members semantics

@@ -81,6 +81,19 @@ class BenchSpec extends AnyFunSuite with Matchers {
     compact.count(_ == '{') shouldBe compact.count(_ == '}')
   }
 
+  test("the de-noising setting rides both JSON lines; the compact line still fits the tail window") {
+    val json = Bench.renderJson(Seq("a" -> 1.0), 1, sf, slowExtraIters = 1, slowSec = 1.5)
+    json should include(""""slow_extra_iters":1,"slow_sec":1.5""")
+    val results = (1 to 250).map(i => f"q${i}%03d_some_longish_query_name" -> (i * 0.013))
+    val compact = Bench.renderCompactJson(results, iters = 2, sfDir = sf, calSec = 0.5,
+      calParSec = 0.25, cpus = 32, slowExtraIters = 1, slowSec = 1.5)
+    compact should include(""""slow_extra_iters":1,"slow_sec":1.5""")
+    compact.length should be < 1800
+    compact.count(_ == '{') shouldBe compact.count(_ == '}')
+    // unstated settings read -1, like the calibration fields
+    Bench.renderCompactJson(Seq("a" -> 1.0), 1, sf) should include(""""slow_extra_iters":-1""")
+  }
+
   test("slow queries get extra de-noising iterations; fast ones do not (r14 verdict ask #2)") {
     var slowCalls = 0
     val counted = Q.noOracle { (s, d) =>

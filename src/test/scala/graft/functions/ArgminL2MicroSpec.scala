@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.TestSpark
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -16,6 +17,9 @@ class ArgminL2MicroSpec extends AnyFunSuite with Matchers {
   private def candsDf(cents: Seq[(Int, Seq[Double])]) =
     cents.toDF("cand", "cvec")
       .agg(collect_list(struct(col("cand"), col("cvec"))).as("cands"))
+
+  private def argmin(emb: Column, cands: Column): Column =
+    call_function("argmin_l2_micro", emb, cands)
 
   test("matches the l2_micro fan-out argmin on random data (both codegen paths)") {
     val rnd = new scala.util.Random(7)
@@ -34,8 +38,8 @@ class ArgminL2MicroSpec extends AnyFunSuite with Matchers {
       .agg(min(struct(col("dist"), col("cand"))).as("m"))
       .select(col("vec_id"), col("m.cand").as("assigned"))
 
-    val fused = v.crossJoin(broadcast(candsDf(cents)))
-      .select(col("vec_id"), expr("argmin_l2_micro(embedding, cands)").as("assigned"))
+    val fused = v
+      .select(col("vec_id"), argmin(col("embedding"), candsDf(cents).scalar()).as("assigned"))
 
     Seq("true", "false").foreach { cg =>
       spark.conf.set("spark.sql.codegen.wholeStage", cg)
@@ -52,8 +56,8 @@ class ArgminL2MicroSpec extends AnyFunSuite with Matchers {
     val v = Seq((1L, Seq(0.5f, 0.5f))).toDF("vec_id", "embedding")
     val c = Seq(500000.0, 500000.0)
     // two identical centroids, listed larger-cand first
-    val r = v.crossJoin(broadcast(candsDf(Seq(9 -> c, 3 -> c))))
-      .select(expr("argmin_l2_micro(embedding, cands)")).head().getInt(0)
+    val r = v.select(argmin(col("embedding"), candsDf(Seq(9 -> c, 3 -> c)).scalar()))
+      .head().getInt(0)
     r shouldBe 3
   }
 
@@ -85,58 +89,7 @@ class ArgminL2MicroSpec extends AnyFunSuite with Matchers {
       7 -> exact.map(_ + 200.0), // worse, early-exits
       2 -> exact                 // exact match, last
     )
-    val r = v.crossJoin(broadcast(candsDf(cents)))
-      .select(expr("argmin_l2_micro(embedding, cands)")).head().getInt(0)
+    val r = v.select(argmin(col("embedding"), candsDf(cents).scalar())).head().getInt(0)
     r shouldBe 2
-  }
-
-  test("decode cache survives UnsafeRow buffer reuse (same base+offset, new bytes)") {
-    // Spark reuses UnsafeRow backing buffers (shuffle-read serializer,
-    // sort iterators): the same (baseObject, baseOffset) can later hold
-    // a DIFFERENT candidate array. Simulate exactly that: evaluate with
-    // one candidate set, overwrite the backing bytes in place with a
-    // second same-shape set, evaluate again through the SAME wrapper —
-    // the content fingerprint must force a re-decode, not serve the
-    // stale argmin.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types._
-    import org.apache.spark.unsafe.Platform
-
-    val candType = ArrayType(StructType(Seq(
-      StructField("cand", IntegerType), StructField("cvec", ArrayType(DoubleType)))))
-    val embType = ArrayType(FloatType)
-    def candsInternal(cents: Seq[(Int, Seq[Double])]) =
-      new GenericArrayData(cents.map { case (c, vv) =>
-        InternalRow(c, new GenericArrayData(vv.toArray))
-      }.toArray)
-
-    val proj = UnsafeProjection.create(Array[DataType](candType))
-    // set A: cand 1 at the embedding, cand 2 far away → argmin 1
-    // set B (same shape): cand 1 far away, cand 2 at the embedding → argmin 2
-    val emb = Seq(0.5f, 0.5f)
-    val at = Seq(500000.0, 500000.0); val far = Seq(-500000.0, -500000.0)
-    val rowA = proj(InternalRow(candsInternal(Seq(1 -> at, 2 -> far)))).copy()
-    val rowB = proj(InternalRow(candsInternal(Seq(1 -> far, 2 -> at)))).copy()
-    val arrA = rowA.getArray(0)
-    val arrB = rowB.getArray(0)
-    arrA.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeArrayData]
-      .getSizeInBytes shouldBe
-      arrB.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeArrayData]
-        .getSizeInBytes
-
-    val exprUnderTest = ArgminL2Micro(
-      BoundReference(0, embType, nullable = true),
-      BoundReference(1, candType, nullable = true))
-    val embArr = new GenericArrayData(emb.toArray)
-    exprUnderTest.eval(InternalRow(embArr, arrA)) shouldBe 1
-
-    // overwrite A's backing region in place with B's bytes
-    val uA = arrA.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeArrayData]
-    val uB = arrB.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeArrayData]
-    Platform.copyMemory(uB.getBaseObject, uB.getBaseOffset,
-      uA.getBaseObject, uA.getBaseOffset, uA.getSizeInBytes.toLong)
-    exprUnderTest.eval(InternalRow(embArr, arrA)) shouldBe 2
   }
 }

@@ -44,12 +44,12 @@ class GraftExtensionsSpec extends AnyFunSuite with Matchers {
     val names = GraftExtensions.annFunctions.map(_._1.funcName)
     names should contain allOf ("dense_lut_micro", "pq_adc_micro", "pq_encode_micro",
       "pq_encode_shift_micro", "sq8_quantize_micro", "argmin_l2_micro",
-      "argmin2_l2_micro", "argmin_top2_l2_micro", "argmin_pair_l2_micro",
+      "argmin_top2_l2_micro", "argmin_pair_l2_micro",
       "argmin_topn_l2_micro", "argmin_struct_l2_micro")
     // every builder constructs its native expression (catches a
     // copy-paste triple pointing at the wrong case class)
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    val dummy: Seq[Expression] = Seq(Literal(1), Literal(2), Literal(3))
+    val dummy: Seq[Expression] = Seq(Literal(1), Literal(2), Literal(3), Literal(4))
     GraftExtensions.annFunctions.foreach { case (ident, info, builder) =>
       info.getName shouldBe ident.funcName
       val built = builder(dummy)
