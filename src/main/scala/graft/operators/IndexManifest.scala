@@ -128,13 +128,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Commit protocols (MULTI-WRITER safe via optimistic concurrency: the
   * atomic publish-if-absent of `manifest-<gen>.json` is a compare-and-
-  * swap on the generation number — a loser re-reads current and
-  * retries; appends retry by UNION (their staged files are in no
-  * manifest yet, and a racing compaction read a snapshot without them,
-  * so union never double-counts), compactions/replaces/deletes retry by
-  * REDOING their work (their snapshot is stale — committing it would
-  * drop or resurrect a racer's rows — the asymmetry ManifestSpec's
-  * concurrent-writer tests pin). Time travel: commit records and data
+  * swap on the generation number, and every write verb but the base
+  * publish runs through ONE loop, [[commitLoop]], in one of two modes —
+  * an append that loses the CAS REBASES its staged files onto the new
+  * current (16 tries), every other verb REDOES its work against it
+  * (4 tries) — the asymmetry ManifestSpec's concurrent-writer tests
+  * pin; the loop's doc gives the reasons. Time travel: commit records and data
   * files are immutable, so [[readAt]] serves any retained generation
   * byte-identically while current advances; [[vacuum]]'s `keepGens` is
   * the retention window):
@@ -418,7 +417,7 @@ object IndexManifest {
     * way production formats' change feeds skip dataChange=false
     * actions. */
   private[operators] sealed trait Rec
-  private final case class FullRec(st: State, rewrite: Boolean = false) extends Rec
+  private final case class FullRec(st: State, rewrite: Boolean = false) extends Rec with Publish
   private final case class DeltaRec(gen: Long, adds: Seq[FileEntry], removes: Seq[String],
       wm: Map[String, Long], dvAdds: Seq[DvEntry], schema: Option[String],
       rewrite: Boolean = false,
@@ -631,10 +630,13 @@ object IndexManifest {
     * checksum + parse per plan; production formats cache exactly this
     * snapshot. METADATA ONLY: the State holds file names, stats and
     * schema DDL, never rows; every data file is still read per query.
-    * Safety: the key embeds the serving record file's (mtime, length)
-    * identity — an out-of-band wipe-and-restage of the same tree path
-    * changes the file identity and misses the memo — and every
-    * successful same-JVM publish drops the tree's entries outright.
+    * Safety: the key embeds the serving record file's (name, mtime,
+    * length) identity AND its first 32 bytes — the `{"checksum":"…"`
+    * prefix, the crc32 of the record's body — so an out-of-band
+    * wipe-and-restage of the same tree path misses the memo even when
+    * the copy preserves mtimes (`cp -a`, `rsync -a`) and the record
+    * keeps its length; and every successful same-JVM publish drops the
+    * tree's entries outright.
     * BOUNDED: an access-ordered LRU of [[StateMemoCap]] States, so a
     * reader that follows an external writer holds at most that many
     * generations instead of one per generation it ever read. One full
@@ -654,11 +656,14 @@ object IndexManifest {
     val mp = new Path(md, manifestName(gen))
     val key =
       try {
-        // one getFileStatus replaces the full chain read; existence is
-        // probed on the checkpoint first, same as resolution order
+        // one getFileStatus and a 32-byte read replace the full chain
+        // read; existence is probed on the checkpoint first, same as
+        // resolution order
         val rec = try fs.getFileStatus(cp)
           catch { case _: java.io.FileNotFoundException => fs.getFileStatus(mp) }
-        s"${root.toUri}#$gen#${rec.getPath.getName}#${rec.getModificationTime}#${rec.getLen}"
+        val in = fs.open(rec.getPath)
+        val head = try new String(in.readNBytes(32), "UTF-8") finally in.close()
+        s"${root.toUri}#$gen#${rec.getPath.getName}#${rec.getModificationTime}#${rec.getLen}#$head"
       } catch { case _: java.io.FileNotFoundException => null }
     if (key == null) return resolveUncached(fs, root, gen) // broken chain: fail loudly there
     val hit = stateMemo.get(key)
@@ -846,6 +851,10 @@ object IndexManifest {
     tryPublish(fs, root, manifestName(st.gen),
       wrap(fullBody(st.copy(fullGen = st.gen, v1Descent = false), rewrite)))
 
+  /** What one write attempt publishes: a delta ([[Commit]], on top of
+    * the state the attempt read) or a full record ([[FullRec]]). */
+  private sealed trait Publish
+
   /** One commit's actions (the delta record's payload). */
   private final case class Commit(
       adds: Seq[FileEntry] = Seq.empty,
@@ -854,7 +863,7 @@ object IndexManifest {
       wm: Map[String, Long] = Map.empty,
       schema: Option[String] = None,
       rewrite: Boolean = false,
-      fieldIds: Option[Seq[(String, Int)]] = None)
+      fieldIds: Option[Seq[(String, Int)]] = None) extends Publish
 
   /** O(delta) commit attempt on top of `prev`: publish the delta record
     * at gen+1, then (on a win) write the checkpoint sidecar if the tail
@@ -1221,6 +1230,103 @@ object IndexManifest {
     }
   }
 
+  // ─────────────────────────── optimistic commit ───────────────────────────
+
+  /** The current [[State]] of the table at `dir`, failing loudly before
+    * its first publish. */
+  private def currentOrFail(spark: SparkSession, dir: String): State =
+    currentState(spark, dir).getOrElse(sys.error(s"no manifest at $dir — publishBase first"))
+
+  /** One staged attempt of a write verb: the record it publishes; the
+    * root-relative, token-scoped files a losing attempt deletes
+    * (`outputs`); what goes once the attempt ends either way (`scratch`:
+    * its staging dirs); and how to re-target the SAME staged files at a
+    * newer state after a lost CAS — only an append can, every other
+    * verb answers None and is redone. */
+  private final case class Attempt(publish: Publish, outputs: Seq[String] = Seq.empty,
+      scratch: Seq[String] = Seq.empty, rebase: State => Option[Publish] = _ => None) {
+    def finish(fs: FileSystem, root: Path): Unit =
+      scratch.foreach(p => fs.delete(new Path(root, p), true))
+    def discard(fs: FileSystem, root: Path): Unit = {
+      outputs.foreach(p => fs.delete(new Path(root, p), true))
+      finish(fs, root)
+    }
+  }
+
+  /** THE OPTIMISTIC COMMIT LOOP behind every write verb but
+    * [[publishBase]]. Each round reads the current generation, no-ops a
+    * batch whose watermark is already committed (if a replay of it won
+    * meanwhile, a held attempt's files are duplicates — token-scoped,
+    * ours alone — and are deleted), runs the verb's
+    * `attempt` body on that state (None: nothing to commit), fires the
+    * [[interruptBeforeManifest]] failpoint, and publishes — a delta
+    * through [[tryCommit]], a full record through [[tryWriteFull]]. A
+    * lost CAS means another writer took gen+1 meanwhile; the loser then
+    *  - REBASES (an append): its staged files are renamed in under this
+    *    attempt's unique token and referenced by NO manifest, and a
+    *    racing compaction read a generation WITHOUT them, so committing
+    *    the same files on top of the new current never double-counts;
+    *  - REDOES (every other verb, and an append whose rebase declines):
+    *    its rewrite, match set or validation was a snapshot of a
+    *    generation that no longer includes the racer's rows — committing
+    *    it would DROP them or resurrect rows the racer removed. Its
+    *    token-scoped outputs are invisible (in no manifest): delete them
+    *    and run the body again against the NEW current.
+    * `tries` bounds the publishes (4 for redo verbs, 16 for the append):
+    * a writer that keeps losing — a maintenance job under sustained
+    * append pressure, a livelock — fails loudly and yields to the
+    * writers instead of spinning. Its last attempt's outputs are
+    * deleted first. */
+  private def commitLoop(spark: SparkSession, dir: String, verb: String, tries: Int,
+      batchId: String = "")(attempt: State => Option[Attempt]): Unit = {
+    val (fs, root) = fsOf(spark, dir)
+    @scala.annotation.tailrec
+    def round(n: Int, lost: Option[Attempt]): Unit = {
+      val st = currentOrFail(spark, dir)
+      if (batchId.nonEmpty && isCommitted(st, batchId)) {
+        noteWatermarkNoOp(st, batchId, verb)
+        lost.foreach(_.discard(fs, root))
+      } else {
+        val rebased = lost.flatMap { a =>
+          val rec = try a.rebase(st) catch { case e: Throwable => a.discard(fs, root); throw e }
+          if (rec.isEmpty) a.discard(fs, root)
+          rec.map(a -> _)
+        }
+        rebased.orElse(attempt(st).map { a => interruptBeforeManifest(); (a, a.publish) }) match {
+          case None => ()
+          case Some((a, rec)) =>
+            val won = rec match {
+              case c: Commit              => tryCommit(fs, root, st, c)
+              case FullRec(full, rewrite) => tryWriteFull(fs, root, full, rewrite)
+            }
+            if (won) a.finish(fs, root)
+            else if (n < tries) round(n + 1, Some(a))
+            else {
+              a.discard(fs, root)
+              val what = if (batchId.isEmpty) verb else s"$verb $batchId"
+              sys.error(s"$what lost the manifest race $tries times at $dir — yielding to the writers")
+            }
+        }
+      }
+    }
+    round(1, None)
+  }
+
+  /** Stage one attempt's data files: write `laidOut` under
+    * `<stageDir><id>-<token>`, then rename them into the live partition
+    * dirs as `<prefix><id>-<token>-…` (token = this attempt's nonce).
+    * Returns the renamed-in entries and the staging dir's name. */
+  private def stage(spark: SparkSession, dir: String, st: State, laidOut: DataFrame,
+      stageDir: String, prefix: String, id: String,
+      fieldIds: Seq[(String, Int)]): (Seq[FileEntry], String) = {
+    val (fs, root) = fsOf(spark, dir)
+    val token = newToken()
+    val staging = s"$stageDir$id-$token"
+    writeStaged(laidOut, st.partCol, st.bloomCols, new Path(root, staging).toString, fieldIds)
+    (renameStagedIn(fs, root, new Path(root, staging), s"$prefix$id-$token-",
+      st.partCol, st.statCols, st.buckets), staging)
+  }
+
   /** ADD a CHECK constraint: the EXISTING table must already satisfy it
     * (one O(table) validation scan — the ALTER TABLE ADD CONSTRAINT
     * contract), then the constraint set commits as one metadata record
@@ -1229,37 +1335,22 @@ object IndexManifest {
     * here, not silently at some later append. */
   def addCheck(spark: SparkSession, dir: String, name: String, sqlExpr: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe constraint name '$name'")
-    val (fs, root) = fsOf(spark, dir)
-    var attempts = 4
-    while (true) {
-      val st = current(fs, root).getOrElse(
-        sys.error(s"no manifest at $dir — publishBase first"))
+    commitLoop(spark, dir, "addCheck", tries = 4) { st =>
       require(!st.checks.exists(_._1 == name), s"check '$name' already exists at $dir")
       val table = serve(spark, dir, st, st.files)
       require(checkIsBoolean(table, sqlExpr),
         s"check '$name' ($sqlExpr) does not resolve to a BOOLEAN against the table schema")
       validateChecks(Seq(name -> sqlExpr), table, s"existing data at $dir")
-      if (tryWriteFull(fs, root, st.copy(gen = st.gen + 1,
-          checks = st.checks :+ (name -> sqlExpr)))) return
-      attempts -= 1
-      require(attempts > 0, s"addCheck lost the manifest race repeatedly at $dir")
+      Some(Attempt(FullRec(st.copy(gen = st.gen + 1, checks = st.checks :+ (name -> sqlExpr)))))
     }
   }
 
   /** DROP a CHECK constraint — one metadata record. */
-  def dropCheck(spark: SparkSession, dir: String, name: String): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    var attempts = 4
-    while (true) {
-      val st = current(fs, root).getOrElse(
-        sys.error(s"no manifest at $dir — publishBase first"))
+  def dropCheck(spark: SparkSession, dir: String, name: String): Unit =
+    commitLoop(spark, dir, "dropCheck", tries = 4) { st =>
       require(st.checks.exists(_._1 == name), s"no check '$name' at $dir")
-      if (tryWriteFull(fs, root, st.copy(gen = st.gen + 1,
-          checks = st.checks.filterNot(_._1 == name)))) return
-      attempts -= 1
-      require(attempts > 0, s"dropCheck lost the manifest race repeatedly at $dir")
+      Some(Attempt(FullRec(st.copy(gen = st.gen + 1, checks = st.checks.filterNot(_._1 == name)))))
     }
-  }
 
   // ──────────────────────────── write protocols ────────────────────────────
 
@@ -1319,85 +1410,48 @@ object IndexManifest {
   def appendBatch(spark: SparkSession, enc: DataFrame, dir: String, batchId: String): Unit = {
     // '-' delimits the name components, so it stays out of the batchId
     require(batchId.matches("[A-Za-z0-9_]+"), s"unsafe batchId: $batchId")
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    if (isCommitted(st, batchId)) { noteWatermarkNoOp(st, batchId, "append"); return }
-    require(enc.columns.contains(st.partCol),
-      s"partition column '${st.partCol}' missing from batch")
-    evolveSchema(st, enc.schema): Unit // preflight: type conflicts fail BEFORE the write
-    validateChecks(st.checks, enc, s"append $batchId")
     val (writer, version) = splitBatchId(batchId)
-    // OPTIMISTIC COMMIT: another writer (a racing append of a DIFFERENT
-    // batch, or a compaction) may take gen+1 between our staging and our
-    // manifest publish. Our data files are renamed in under this
-    // attempt's unique token and referenced by NO manifest, so losing
-    // the CAS is recoverable without touching data: re-read current,
-    // commit our delta on top of the NEW current. Correct against a
-    // racing COMPACTION too: the compactor read a generation WITHOUT
-    // this batch, so its output cannot contain these rows — the delta
-    // never double-counts. If a REPLAY of this very batch won meanwhile,
-    // our files are duplicates: token-scoped, ours alone — delete them
-    // and bow out. Bounded attempts: livelock is a deployment bug worth
-    // failing loudly on, not spinning through.
-    //
-    // FIELD-ID RACE (the one CAS loss data-file retargeting can't fix):
-    // a batch introducing a NEW column stamps that column's to-be-
-    // committed field id into its files BEFORE the commit; if a racing
-    // writer evolved the schema meanwhile, the id this attempt stamped
-    // may now belong to the racer's column — committing would bind one
-    // id to two columns. The staged files are wrong, not just the
-    // record: delete them and RESTAGE with the re-planned ids (the
-    // compaction-CAS-loss recovery shape, O(batch) and only on the
-    // double-schema-evolution race).
-    var stageRounds = 0
-    var done = false
-    while (!done) {
-      stageRounds += 1
-      require(stageRounds <= 4,
-        s"append $batchId lost the schema-evolution race $stageRounds times at $dir")
-      val base = current(fs, root).getOrElse(sys.error(s"manifest disappeared at $dir"))
-      val writeIds = evolveFieldIds(base, evolveSchema(base, enc.schema))
-        .getOrElse(base.fieldIds)
-      val stamped = enc.columns.flatMap(n => writeIds.collectFirst { case (`n`, i) => (n, i) }).toSeq
-      val token = newToken()
-      val staging = new Path(root, s".staging-$batchId-$token")
-      writeStaged(
-        clustered(enc, base.partCol, Seq(col(base.statCols.head)), base.buckets, base.bucketCols),
-        base.partCol, base.bloomCols, staging.toString, writeIds)
-      val added = renameStagedIn(fs, root, staging, s"ingest-$batchId-$token-",
-        base.partCol, base.statCols, base.buckets)
-      interruptBeforeManifest()
-      var attempts = 0
-      var committed = false
-      var restage = false
-      while (!committed && !restage) {
-        attempts += 1
-        require(attempts <= 16, s"append $batchId lost the manifest race $attempts times at $dir")
-        val cur = current(fs, root).getOrElse(sys.error(s"manifest disappeared at $dir"))
-        if (isCommitted(cur, batchId)) {
-          noteWatermarkNoOp(cur, batchId, "append")
-          added.foreach(e => fs.delete(new Path(root, e.path), false))
-          committed = true
-        } else {
-          val ddl = evolveSchema(cur, enc.schema)
-          val ids = evolveFieldIds(cur, ddl)
-          val nowIds = ids.getOrElse(cur.fieldIds)
-          val nowStamped = enc.columns
-            .flatMap(n => nowIds.collectFirst { case (`n`, i) => (n, i) }).toSeq
-          if (nowStamped != stamped) {
-            log.warn(s"append $batchId at $dir hit the schema-evolution race " +
-              s"(stamped $stamped, current plan $nowStamped) — restaging with re-planned ids")
-            added.foreach(e => fs.delete(new Path(root, e.path), false))
-            restage = true
-          } else {
-            committed = tryCommit(fs, root, cur, Commit(adds = added,
-              wm = Map(writer -> version), schema = ddl, fieldIds = ids))
-          }
+    // committing on `st`: the schema and id map the batch evolves, the
+    // ids its files are written with, and the ids its own columns carry
+    // (a type conflict fails loudly here, BEFORE any write)
+    def plan(st: State) = {
+      val ddl = evolveSchema(st, enc.schema)
+      val ids = evolveFieldIds(st, ddl)
+      val writeIds = ids.getOrElse(st.fieldIds)
+      (ddl, ids, writeIds, enc.columns.toSeq.flatMap(n => writeIds.find(_._1 == n)))
+    }
+    commitLoop(spark, dir, "append", tries = 16, batchId) { st =>
+      require(enc.columns.contains(st.partCol),
+        s"partition column '${st.partCol}' missing from batch")
+      val (ddl, ids, writeIds, stamped) = plan(st)
+      validateChecks(st.checks, enc, s"append $batchId")
+      val (added, staging) = stage(spark, dir, st,
+        clustered(enc, st.partCol, Seq(col(st.statCols.head)), st.buckets, st.bucketCols),
+        ".staging-", "ingest-", batchId, writeIds)
+      def commit(ddl: Option[String], ids: Option[Seq[(String, Int)]]) =
+        Commit(adds = added, wm = Map(writer -> version), schema = ddl, fieldIds = ids)
+      // REBASE onto a racer's generation, unless the racer changed what
+      // these files or rows must satisfy:
+      //  - a racing addCheck: the rows must pass the NEW checks too, or
+      //    the rebase would serve rows that break a declared constraint
+      //    (on a violation the loop deletes the files; nothing commits);
+      //  - a racing schema evolution (FIELD-ID RACE, the one CAS loss
+      //    data-file retargeting can't fix): a batch introducing a NEW
+      //    column stamps that column's to-be-committed field id into its
+      //    files BEFORE the commit; the id may now belong to the racer's
+      //    column, and committing would bind one id to two columns. The
+      //    staged files are wrong, not just the record: decline, and the
+      //    loop deletes them and RESTAGES with the re-planned ids.
+      Some(Attempt(commit(ddl, ids), added.map(_.path), Seq(staging), rebase = { cur =>
+        validateChecks(cur.checks.filterNot(st.checks.contains), enc, s"append $batchId")
+        val (curDdl, curIds, _, now) = plan(cur)
+        if (now == stamped) Some(commit(curDdl, curIds))
+        else {
+          log.warn(s"append $batchId at $dir hit the schema-evolution race " +
+            s"(stamped $stamped, current plan $now) — restaging with re-planned ids")
+          None
         }
-      }
-      fs.delete(staging, true)
-      done = committed
+      }))
     }
   }
 
@@ -1430,47 +1484,26 @@ object IndexManifest {
       lo: Long, hi: Long, batchId: String): Unit = {
     require(batchId.matches("[A-Za-z0-9_]+"), s"unsafe batchId: $batchId")
     require(lo <= hi, s"empty replace range [$lo, $hi]")
-    replaceAttempt(spark, enc, dir, lo, hi, batchId, attemptsLeft = 4)
-  }
-
-  private def replaceAttempt(spark: SparkSession, enc: DataFrame, dir: String,
-      lo: Long, hi: Long, batchId: String, attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    if (isCommitted(st, batchId)) { noteWatermarkNoOp(st, batchId, "replace"); return }
-    val key = st.statCols.head
-    val (overlap, _) = planRange(st, lo, hi)
-    val token = newToken()
-    val staging = new Path(root, s".replace-$batchId-$token")
-    val replacement = enc.filter(col(key).between(lo, hi))
-    validateChecks(st.checks, replacement, s"replace $batchId")
-    val survivors =
-      if (overlap.isEmpty) replacement
-      else serve(spark, dir, st, overlap)
-        // null-safe survival: a NULL clustering value is not in [lo, hi]
-        .filter(!coalesce(col(key).between(lo, hi), lit(false)))
-        .unionByName(replacement, allowMissingColumns = true)
-    writeStaged(clustered(survivors, st.partCol, Seq(col(key)), st.buckets, st.bucketCols),
-      st.partCol, st.bloomCols, staging.toString,
-      evolveFieldIds(st, evolveSchema(st, survivors.schema)).getOrElse(st.fieldIds))
-    val added = renameStagedIn(fs, root, staging, s"replace-$batchId-$token-",
-      st.partCol, st.statCols, st.buckets)
-    interruptBeforeManifest()
     val (writer, version) = splitBatchId(batchId)
-    if (!tryCommit(fs, root, st, Commit(adds = added, removes = overlap.map(_.path),
-        wm = Map(writer -> version), schema = evolveSchema(st, survivors.schema),
-        fieldIds = evolveFieldIds(st, evolveSchema(st, survivors.schema))))) {
-      // stale snapshot: a racer's files may be missing from the overlap
-      // partition — discard this attempt's (invisible) output and redo
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"replace $batchId lost the manifest race repeatedly at $dir — yielding to the writers")
-      replaceAttempt(spark, enc, dir, lo, hi, batchId, attemptsLeft - 1)
-      return
+    commitLoop(spark, dir, "replace", tries = 4, batchId) { st =>
+      val key = st.statCols.head
+      val (overlap, _) = planRange(st, lo, hi)
+      val replacement = enc.filter(col(key).between(lo, hi))
+      validateChecks(st.checks, replacement, s"replace $batchId")
+      val survivors =
+        if (overlap.isEmpty) replacement
+        else serve(spark, dir, st, overlap)
+          // null-safe survival: a NULL clustering value is not in [lo, hi]
+          .filter(!coalesce(col(key).between(lo, hi), lit(false)))
+          .unionByName(replacement, allowMissingColumns = true)
+      val ddl = evolveSchema(st, survivors.schema)
+      val ids = evolveFieldIds(st, ddl)
+      val (added, staging) = stage(spark, dir, st,
+        clustered(survivors, st.partCol, Seq(col(key)), st.buckets, st.bucketCols),
+        ".replace-", "replace-", batchId, ids.getOrElse(st.fieldIds))
+      Some(Attempt(Commit(adds = added, removes = overlap.map(_.path),
+        wm = Map(writer -> version), schema = ddl, fieldIds = ids), added.map(_.path), Seq(staging)))
     }
-    fs.delete(staging, true)
   }
 
   /** MERGE-ON-READ DELETE by arbitrary predicate — deletion vectors:
@@ -1493,15 +1526,25 @@ object IndexManifest {
     * measured comparison is in BASELINE.md. */
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column, batchId: String): Unit = {
     require(batchId.matches("[A-Za-z0-9_]+"), s"unsafe batchId: $batchId")
-    deleteAttempt(spark, dir, predicate, batchId, attemptsLeft = 4)
+    val (writer, version) = splitBatchId(batchId)
+    commitLoop(spark, dir, "delete", tries = 4, batchId) { st =>
+      // positions of matching LIVE rows (existing DVs applied first, so a
+      // re-delete of an already-deleted row adds no duplicate pair)
+      val matched = withPosition(spark, dir, st, st.files)
+        .filter(predicate)
+        .select(col(PosFile).as("file"), col(PosIndex).as("row_index"))
+      val dv = writeDvSidecar(spark, dir, matched, batchId)
+      Some(Attempt(Commit(dvAdds = dv.toSeq, wm = Map(writer -> version)), dv.map(_.path).toSeq))
+    }
   }
 
   /** Write one COMPRESSED deletion-vector sidecar for `matched`
     * (columns `file`, `row_index`): one row per touched file —
     * `(file, n, positions)`, positions the [[DvCodec]] delta-varint of
-    * the file's sorted indexes — staged then renamed under `_dv/dv2-`.
-    * Returns (sidecar rel path, deleted-row count). ONE sidecar file
-    * per commit: a deletion vector is metadata (~1 byte per deleted row
+    * the file's sorted indexes — staged then renamed under `_dv/dv2-`
+    * with a fresh attempt token. Returns the sidecar's entry, or None
+    * (sidecar deleted, nothing to reference) when no row matched. ONE
+    * sidecar file per commit: a deletion vector is metadata (~1 byte per deleted row
     * after gap encoding, before parquet page compression collapses
     * regular gap patterns further) — fanning it across the shuffle
     * partitioning writes dozens of KB-sized parquet files whose fixed
@@ -1513,12 +1556,14 @@ object IndexManifest {
     * from one columnar read of the sidecar's tiny `n` column — the
     * sidecar has O(touched files) rows, so this is a metadata-sized
     * job, not a table scan. */
-  private def writeDvSidecar(spark: SparkSession, fs: FileSystem, root: Path,
-      matched: DataFrame, batchId: String, token: String): (String, Long) = {
+  private def writeDvSidecar(spark: SparkSession, dir: String,
+      matched: DataFrame, batchId: String): Option[DvEntry] = {
+    val (fs, root) = fsOf(spark, dir)
     val enc = udf((xs: Seq[Long]) => DvCodec.encode(xs.toArray))
     val packed = matched.groupBy(col("file"))
       .agg(count(lit(1)).as("n"), sort_array(collect_list(col("row_index"))).as("idx"))
       .select(col("file"), col("n"), enc(col("idx")).as("positions"))
+    val token = newToken()
     val staging = new Path(root, s".dvstage-$batchId-$token")
     packed.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val dvRel = s"_dv/dv2-$batchId-$token"
@@ -1526,34 +1571,8 @@ object IndexManifest {
     require(fs.rename(staging, new Path(root, dvRel)), s"rename failed: $staging -> $dvRel")
     val n = spark.read.parquet(new Path(root, dvRel).toString)
       .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
-    (dvRel, n)
-  }
-
-  private def deleteAttempt(spark: SparkSession, dir: String, predicate: Column,
-      batchId: String, attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    if (isCommitted(st, batchId)) { noteWatermarkNoOp(st, batchId, "delete"); return }
-    val token = newToken()
-    // positions of matching LIVE rows (existing DVs applied first, so a
-    // re-delete of an already-deleted row adds no duplicate pair)
-    val matched = withPosition(spark, dir, st, st.files)
-      .filter(predicate)
-      .select(col(PosFile).as("file"), col(PosIndex).as("row_index"))
-    val (dvRel, n) = writeDvSidecar(spark, fs, root, matched, batchId, token)
-    interruptBeforeManifest()
-    val (writer, version) = splitBatchId(batchId)
-    val dvAdds = if (n > 0) Seq(DvEntry(dvRel, n)) else Seq.empty
-    if (!tryCommit(fs, root, st, Commit(dvAdds = dvAdds, wm = Map(writer -> version)))) {
-      // stale position set: a racer committed — discard and redo
-      fs.delete(new Path(root, dvRel), true)
-      require(attemptsLeft > 1,
-        s"delete $batchId lost the manifest race repeatedly at $dir — yielding to the writers")
-      deleteAttempt(spark, dir, predicate, batchId, attemptsLeft - 1)
-      return
-    }
-    if (n == 0) fs.delete(new Path(root, dvRel), true) // committed, but nothing to reference
+    if (n == 0) { fs.delete(new Path(root, dvRel), true); None }
+    else Some(DvEntry(dvRel, n))
   }
 
   /** MERGE INTO through the manifest — the upsert DML verb, in ONE
@@ -1609,64 +1628,35 @@ object IndexManifest {
     require(keys.nonEmpty, "at least one merge key")
     require(cdc.columns.contains(op), s"cdc is missing the op column '$op'")
     keys.foreach(k => require(cdc.columns.contains(k), s"cdc is missing merge key '$k'"))
-    mergeAttempt(spark, cdc, dir, keys, op, batchId, attemptsLeft = 4)
-  }
-
-  private def mergeAttempt(spark: SparkSession, cdc: DataFrame, dir: String,
-      keys: Seq[String], op: String, batchId: String, attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    if (isCommitted(st, batchId)) { noteWatermarkNoOp(st, batchId, "merge"); return }
-    require(cdc.columns.contains(st.partCol),
-      s"partition column '${st.partCol}' missing from cdc (rows carry their full payload)")
-    // one op per key — enforced, not assumed: a duplicate both fans out
-    // the position match and double-writes the logical row
-    val dupKeys = cdc.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0L,
-      s"cdc has duplicate merge keys — compact the batch to one op per key first")
-    val upserts = cdc.filter(col(op) =!= "D").drop(op)
-    evolveSchema(st, upserts.schema): Unit // preflight before any write
-    validateChecks(st.checks, upserts, s"merge $batchId")
-    val token = newToken()
-
-    // matched LIVE rows' positions (existing DVs applied) — every cdc
-    // key deletes its old version: D drops it, U/I replace it
-    val matched = withPosition(spark, dir, st, st.files)
-      .join(cdc.select(keys.map(col): _*), keys, "left_semi")
-      .select(col(PosFile).as("file"), col(PosIndex).as("row_index"))
-    val (dvRel, nDeleted) = writeDvSidecar(spark, fs, root, matched, batchId, token)
-
-    // the new versions: updates' payload + inserts, appended like a batch
-    val staging = new Path(root, s".staging-$batchId-$token")
-    writeStaged(
-      clustered(upserts, st.partCol, Seq(col(st.statCols.head)), st.buckets, st.bucketCols),
-      st.partCol, st.bloomCols, staging.toString,
-      evolveFieldIds(st, evolveSchema(st, upserts.schema)).getOrElse(st.fieldIds))
-    val added = renameStagedIn(fs, root, staging, s"merge-$batchId-$token-",
-      st.partCol, st.statCols, st.buckets)
-
-    interruptBeforeManifest()
     val (writer, version) = splitBatchId(batchId)
-    val dvAdds = if (nDeleted > 0) Seq(DvEntry(dvRel, nDeleted)) else Seq.empty
-    if (!tryCommit(fs, root, st, Commit(adds = added, dvAdds = dvAdds,
-        wm = Map(writer -> version), schema = evolveSchema(st, upserts.schema),
-        fieldIds = evolveFieldIds(st, evolveSchema(st, upserts.schema))))) {
-      // stale match set: a racer committed — its appended rows may match
-      // the cdc (our DV misses them) or it deleted/replaced rows our DV
-      // resurrects. Discard this attempt's (invisible) output and redo
-      // the whole matching against the new current.
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(new Path(root, dvRel), true)
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"merge $batchId lost the manifest race repeatedly at $dir — yielding to the writers")
-      mergeAttempt(spark, cdc, dir, keys, op, batchId, attemptsLeft - 1)
-      return
+    commitLoop(spark, dir, "merge", tries = 4, batchId) { st =>
+      require(cdc.columns.contains(st.partCol),
+        s"partition column '${st.partCol}' missing from cdc (rows carry their full payload)")
+      // one op per key — enforced, not assumed: a duplicate both fans out
+      // the position match and double-writes the logical row
+      val dupKeys = cdc.groupBy(keys.map(col): _*).count()
+        .filter(col("count") > 1).limit(1).count()
+      require(dupKeys == 0L,
+        s"cdc has duplicate merge keys — compact the batch to one op per key first")
+      val upserts = cdc.filter(col(op) =!= "D").drop(op)
+      val ddl = evolveSchema(st, upserts.schema) // preflight before any write
+      val ids = evolveFieldIds(st, ddl)
+      validateChecks(st.checks, upserts, s"merge $batchId")
+
+      // matched LIVE rows' positions (existing DVs applied) — every cdc
+      // key deletes its old version: D drops it, U/I replace it
+      val matched = withPosition(spark, dir, st, st.files)
+        .join(cdc.select(keys.map(col): _*), keys, "left_semi")
+        .select(col(PosFile).as("file"), col(PosIndex).as("row_index"))
+      val dv = writeDvSidecar(spark, dir, matched, batchId)
+
+      // the new versions: updates' payload + inserts, appended like a batch
+      val (added, staging) = stage(spark, dir, st,
+        clustered(upserts, st.partCol, Seq(col(st.statCols.head)), st.buckets, st.bucketCols),
+        ".staging-", "merge-", batchId, ids.getOrElse(st.fieldIds))
+      Some(Attempt(Commit(adds = added, dvAdds = dv.toSeq, wm = Map(writer -> version),
+        schema = ddl, fieldIds = ids), added.map(_.path) ++ dv.map(_.path), Seq(staging)))
     }
-    if (nDeleted == 0) fs.delete(new Path(root, dvRel), true) // committed, nothing referenced
-    fs.delete(staging, true)
   }
 
   /** Manifest-swap compaction: rewrite the CURRENT generation (deletion
@@ -1677,7 +1667,34 @@ object IndexManifest {
     * here graded by the atomic manifest publish. The full snapshot also
     * serves as the log's natural checkpoint. */
   def compact(spark: SparkSession, dir: String, sortCol: String): Unit =
-    compactAttempt(spark, dir, sortCol, attemptsLeft = 4)
+    commitLoop(spark, dir, "compact", tries = 4) { st =>
+      Some(swapAll(spark, dir, st, compacted(spark, dir, st, st.files, sortCol), "compact-"))
+    }
+
+  /** The compaction layout of `files`' live rows: one task per hash
+    * bucket of partition values ⇒ a partition never splits; two-key sort
+    * so within-partition order is unconditional (the
+    * Compaction.compactPartitioned discipline). */
+  private def compacted(spark: SparkSession, dir: String, st: State, files: Seq[FileEntry],
+      sortCol: String): DataFrame =
+    clustered(serve(spark, dir, st, files), st.partCol,
+      Seq(col(st.partCol), col(sortCol)), st.buckets, st.bucketCols)
+
+  /** A full-rewrite attempt (compaction, field-id adoption, z-order):
+    * stage `laidOut` — every live row of `st` — then swap: old files
+    * drop out of view at this ONE full `rewrite:true` publish. The batch
+    * ledger is CARRIED FORWARD — the rewritten files contain every
+    * committed batch's rows, and replay idempotence must survive the
+    * batch's own files disappearing from the listing. */
+  private def swapAll(spark: SparkSession, dir: String, st: State, laidOut: DataFrame,
+      prefix: String): Attempt = {
+    val gen = st.gen + 1
+    val (added, staging) = stage(spark, dir, st, laidOut, ".compact-", prefix, gen.toString,
+      st.fieldIds)
+    Attempt(FullRec(st.copy(gen = gen, files = added,
+      batches = renderWm(mergeWm(st.watermarks, ledgerFromFileNames(st))),
+      dvs = Seq.empty), rewrite = true), added.map(_.path), Seq(staging))
+  }
 
   /** RENAME COLUMN — a METADATA-ONLY commit, zero data rewritten: the
     * column's stable field id keeps naming it inside every parquet
@@ -1707,11 +1724,7 @@ object IndexManifest {
   def renameColumn(spark: SparkSession, dir: String, from: String, to: String): Unit = {
     require(from != to, "rename to the same name is a no-op worth failing loudly on")
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe column name '$to'")
-    val (fs, root) = fsOf(spark, dir)
-    var attempts = 4
-    while (true) {
-      val st = current(fs, root).getOrElse(
-        sys.error(s"no manifest at $dir — publishBase first"))
+    commitLoop(spark, dir, "renameColumn", tries = 4) { st =>
       require(st.fieldIds.nonEmpty,
         s"table at $dir predates field ids — run upgradeFieldIds (one compaction rewrite) first")
       require(st.fieldIds.exists(_._1 == from), s"no column '$from' at $dir")
@@ -1738,29 +1751,25 @@ object IndexManifest {
         }
       }
       val declared = (st.statCols ++ st.bucketCols ++ st.bloomCols).toSet
-      val won =
+      Some(Attempt(
         if (!declared(from))
           // the COMMON rename is an O(delta) record: schema + id map
           // re-bound, nothing else — commit bytes independent of table
           // size, same as any other delta
-          tryCommit(fs, root, st,
-            Commit(schema = Some(newDdl), fieldIds = Some(newIds)))
+          Commit(schema = Some(newDdl), fieldIds = Some(newIds))
         else {
           // a DECLARED column (stat/bucket/bloom binding) renames
           // through a full record — delta records don't carry the
           // declarations, and a rare DDL on a declared column is worth
           // one O(files) publish
           def sub(xs: Seq[String]) = xs.map(c => if (c == from) to else c)
-          tryWriteFull(fs, root, st.copy(gen = st.gen + 1,
+          FullRec(st.copy(gen = st.gen + 1,
             schemaDdl = Some(newDdl),
             fieldIds = newIds,
             statCols = sub(st.statCols),
             bucketCols = sub(st.bucketCols),
             bloomCols = sub(st.bloomCols)))
-        }
-      if (won) return
-      attempts -= 1
-      require(attempts > 0, s"rename lost the manifest race repeatedly at $dir")
+        }))
     }
   }
 
@@ -1769,7 +1778,15 @@ object IndexManifest {
     * assigned ids and commits the id map in the same record — after it,
     * [[renameColumn]] is metadata-only. */
   def upgradeFieldIds(spark: SparkSession, dir: String, sortCol: String): Unit =
-    compactAttempt(spark, dir, sortCol, attemptsLeft = 4, adoptIds = true)
+    commitLoop(spark, dir, "upgradeFieldIds", tries = 4) { st0 =>
+      require(st0.fieldIds.isEmpty, s"table at $dir already carries field ids")
+      val ddl = st0.schemaDdl.getOrElse(sys.error(
+        s"cannot adopt field ids at $dir: no manifest-held schema (normalize the tree first)"))
+      // read BY NAME (files written before ids carry none, and an
+      // id-matched scan refuses them), write stamped with the new ids
+      Some(swapAll(spark, dir, st0.copy(fieldIds = assignFieldIds(StructType.fromDDL(ddl))),
+        compacted(spark, dir, st0, st0.files, sortCol), "compact-"))
+    }
 
   /** DROP COLUMN — the fourth DDL verb (add-on-append, widen, rename,
     * drop), metadata-only like rename: one O(delta) record removes the
@@ -1786,12 +1803,8 @@ object IndexManifest {
     * CHECK constraint references, the last remaining column, and
     * tables without field ids (upgrade first — without ids a reborn
     * name would resurrect old values). */
-  def dropColumn(spark: SparkSession, dir: String, name: String): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    var attempts = 4
-    while (true) {
-      val st = current(fs, root).getOrElse(
-        sys.error(s"no manifest at $dir — publishBase first"))
+  def dropColumn(spark: SparkSession, dir: String, name: String): Unit =
+    commitLoop(spark, dir, "dropColumn", tries = 4) { st =>
       require(st.fieldIds.nonEmpty,
         s"table at $dir predates field ids — run upgradeFieldIds (one compaction rewrite) first")
       require(st.fieldIds.exists(_._1 == name), s"no column '$name' at $dir")
@@ -1822,62 +1835,18 @@ object IndexManifest {
         case (n, i) if n == name => (s"~$i", i)
         case e => e
       }
-      if (tryCommit(fs, root, st, Commit(schema = Some(next.toDDL),
-          fieldIds = Some(retired)))) return
-      attempts -= 1
-      require(attempts > 0, s"dropColumn lost the manifest race repeatedly at $dir")
+      Some(Attempt(Commit(schema = Some(next.toDDL), fieldIds = Some(retired))))
     }
-  }
 
-  /** One optimistic compaction attempt. Unlike an append, a compaction
-    * that loses the manifest CAS cannot commit on top of the new
-    * current: the rewrite was a snapshot of a generation that no longer
-    * includes the racing writer's rows, so committing it would DROP
-    * them. Recovery: the freshly-renamed `compact-<gen>-…` files are
-    * referenced by no manifest (invisible) — delete them and redo the
-    * whole rewrite against the NEW current. Bounded retries: compaction
-    * is a periodic maintenance job; under sustained append pressure it
-    * should yield, not spin. */
-  private def compactAttempt(spark: SparkSession, dir: String, sortCol: String,
-      attemptsLeft: Int, adoptIds: Boolean = false): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st0 = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    val st =
-      if (!adoptIds) st0
-      else {
-        require(st0.fieldIds.isEmpty, s"table at $dir already carries field ids")
-        val ddl = st0.schemaDdl.getOrElse(sys.error(
-          s"cannot adopt field ids at $dir: no manifest-held schema (normalize the tree first)"))
-        st0.copy(fieldIds = assignFieldIds(StructType.fromDDL(ddl)))
-      }
-    val gen = st.gen + 1
-    val token = newToken()
-    val staging = new Path(root, s".compact-$gen-$token")
-    // one task per hash bucket of partition values ⇒ a partition never
-    // splits; two-key sort so within-partition order is unconditional
-    // (the Compaction.compactPartitioned discipline)
-    writeStaged(clustered(serve(spark, dir, st, st.files), st.partCol,
-        Seq(col(st.partCol), col(sortCol)), st.buckets, st.bucketCols),
-      st.partCol, st.bloomCols, staging.toString, st.fieldIds)
-    val added = renameStagedIn(fs, root, staging, s"compact-$gen-$token-",
-      st.partCol, st.statCols, st.buckets)
-    interruptBeforeManifest()
-    // the swap: old files drop out of view at this ONE publish. The
-    // batch ledger is CARRIED FORWARD — the compacted files contain
-    // every committed batch's rows, and replay idempotence must survive
-    // the batch's own files disappearing from the listing.
-    if (!tryWriteFull(fs, root, st.copy(gen = gen, files = added,
-        batches = renderWm(mergeWm(st.watermarks, ledgerFromFileNames(st))),
-        dvs = Seq.empty), rewrite = true)) {
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"compaction lost the manifest race repeatedly at $dir — yielding to the writers")
-      compactAttempt(spark, dir, sortCol, attemptsLeft - 1, adoptIds)
-      return
-    }
-    fs.delete(staging, true)
+  /** A partial-rewrite attempt (partition-scoped and small-file
+    * compaction): rewrite only `targets` and commit the swap as one
+    * O(delta) `rewrite:true` record. */
+  private def swapSome(spark: SparkSession, dir: String, st: State, targets: Seq[FileEntry],
+      sortCol: String): Attempt = {
+    val (added, staging) = stage(spark, dir, st, compacted(spark, dir, st, targets, sortCol),
+      ".compact-", "compact-", (st.gen + 1).toString, st.fieldIds)
+    Attempt(Commit(adds = added, removes = targets.map(_.path), rewrite = true),
+      added.map(_.path), Seq(staging))
   }
 
   /** PARTITION-SCOPED compaction — the O(partition) maintenance unit
@@ -1902,36 +1871,12 @@ object IndexManifest {
   def compactPartitions(spark: SparkSession, dir: String, values: Seq[String],
       sortCol: String): Unit = {
     require(values.nonEmpty, "at least one partition value")
-    compactPartitionsAttempt(spark, dir, values, sortCol, attemptsLeft = 4)
-  }
-
-  private def compactPartitionsAttempt(spark: SparkSession, dir: String,
-      values: Seq[String], sortCol: String, attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    val prefixes = values.map(v => s"${st.partCol}=$v/").toSet
-    val targets = st.files.filter(f => prefixes.exists(f.path.startsWith))
-    if (targets.isEmpty) return // nothing to rewrite: a no-op, not an error
-    val gen = st.gen + 1
-    val token = newToken()
-    val staging = new Path(root, s".compact-$gen-$token")
-    writeStaged(clustered(serve(spark, dir, st, targets), st.partCol,
-        Seq(col(st.partCol), col(sortCol)), st.buckets, st.bucketCols),
-      st.partCol, st.bloomCols, staging.toString, st.fieldIds)
-    val added = renameStagedIn(fs, root, staging, s"compact-$gen-$token-",
-      st.partCol, st.statCols, st.buckets)
-    interruptBeforeManifest()
-    if (!tryCommit(fs, root, st, Commit(adds = added, removes = targets.map(_.path),
-        rewrite = true))) {
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"partition compaction lost the manifest race repeatedly at $dir — yielding to the writers")
-      compactPartitionsAttempt(spark, dir, values, sortCol, attemptsLeft - 1)
-      return
+    commitLoop(spark, dir, "compactPartitions", tries = 4) { st =>
+      val prefixes = values.map(v => s"${st.partCol}=$v/").toSet
+      val targets = st.files.filter(f => prefixes.exists(f.path.startsWith))
+      // nothing to rewrite: a no-op, not an error
+      if (targets.isEmpty) None else Some(swapSome(spark, dir, st, targets, sortCol))
     }
-    fs.delete(staging, true)
   }
 
   /** SMALL-FILE (bin-pack) COMPACTION — the OPTIMIZE verb a streaming
@@ -1950,37 +1895,13 @@ object IndexManifest {
     * every maintenance verb. */
   def compactSmall(spark: SparkSession, dir: String, sortCol: String,
       minRows: Long): Unit =
-    compactSmallAttempt(spark, dir, sortCol, minRows, attemptsLeft = 4)
-
-  private def compactSmallAttempt(spark: SparkSession, dir: String, sortCol: String,
-      minRows: Long, attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    require(st.files.forall(_.rows >= 0),
-      s"table at $dir carries stats-less (v1) entries — compactSmall needs row counts")
-    val targets = st.files.filter(_.rows < minRows)
-    if (targets.size < 2) return // nothing to fold: a no-op, not an error
-    val gen = st.gen + 1
-    val token = newToken()
-    val staging = new Path(root, s".compact-$gen-$token")
-    writeStaged(clustered(serve(spark, dir, st, targets), st.partCol,
-        Seq(col(st.partCol), col(sortCol)), st.buckets, st.bucketCols),
-      st.partCol, st.bloomCols, staging.toString, st.fieldIds)
-    val added = renameStagedIn(fs, root, staging, s"compact-$gen-$token-",
-      st.partCol, st.statCols, st.buckets)
-    interruptBeforeManifest()
-    if (!tryCommit(fs, root, st, Commit(adds = added, removes = targets.map(_.path),
-        rewrite = true))) {
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"small-file compaction lost the manifest race repeatedly at $dir — yielding to the writers")
-      compactSmallAttempt(spark, dir, sortCol, minRows, attemptsLeft - 1)
-      return
+    commitLoop(spark, dir, "compactSmall", tries = 4) { st =>
+      require(st.files.forall(_.rows >= 0),
+        s"table at $dir carries stats-less (v1) entries — compactSmall needs row counts")
+      val targets = st.files.filter(_.rows < minRows)
+      // nothing to fold: a no-op, not an error
+      if (targets.size < 2) None else Some(swapSome(spark, dir, st, targets, sortCol))
     }
-    fs.delete(staging, true)
-  }
 
   /** The Morton (Z-order) key of `cols`, each RANGE-NORMALIZED to
     * `bits` bits before interleaving: bit j of normalized column i
@@ -2027,52 +1948,29 @@ object IndexManifest {
     * the bucket-purity of files. At 100 TB this runs as a partition-
     * scoped maintenance job exactly like compaction. */
   def zorder(spark: SparkSession, dir: String, targetFiles: Int = 16): Unit =
-    zorderAttempt(spark, dir, targetFiles, attemptsLeft = 4)
-
-  private def zorderAttempt(spark: SparkSession, dir: String, targetFiles: Int,
-      attemptsLeft: Int): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
-    require(st.buckets == 0,
-      s"z-ordering a bucketed table is not supported — the bucket layout IS its clustering")
-    require(st.statCols.size >= 2,
-      s"z-order needs >= 2 declared stat columns (have ${st.statCols.mkString(",")}); use compact for 1")
-    val gen = st.gen + 1
-    val token = newToken()
-    val staging = new Path(root, s".compact-$gen-$token")
-    val bits = math.min(16, 62 / st.statCols.size)
-    // global per-column ranges off the manifest's own zone maps — the
-    // normalization needs no data scan
-    val ranges = st.statCols.indices.map { i =>
-      val withStats = st.files.filter(_.hasStatsAt(i))
-      require(withStats.nonEmpty,
-        s"no zone-map stats for '${st.statCols(i)}' at $dir — cannot z-order a stats-less tree")
-      (withStats.map(_.stats(i)._1).min, withStats.map(_.stats(i)._2).max)
+    commitLoop(spark, dir, "zorder", tries = 4) { st =>
+      require(st.buckets == 0,
+        s"z-ordering a bucketed table is not supported — the bucket layout IS its clustering")
+      require(st.statCols.size >= 2,
+        s"z-order needs >= 2 declared stat columns (have ${st.statCols.mkString(",")}); use compact for 1")
+      val bits = math.min(16, 62 / st.statCols.size)
+      // global per-column ranges off the manifest's own zone maps — the
+      // normalization needs no data scan
+      val ranges = st.statCols.indices.map { i =>
+        val withStats = st.files.filter(_.hasStatsAt(i))
+        require(withStats.nonEmpty,
+          s"no zone-map stats for '${st.statCols(i)}' at $dir — cannot z-order a stats-less tree")
+        (withStats.map(_.stats(i)._1).min, withStats.map(_.stats(i)._2).max)
+      }
+      val z = zValue(st.statCols.map(col), ranges, bits)
+      Some(swapAll(spark, dir, st,
+        serve(spark, dir, st, st.files)
+          .withColumn("__graft_z", z)
+          .repartitionByRange(targetFiles, col("__graft_z"))
+          .sortWithinPartitions("__graft_z")
+          .drop("__graft_z"),
+        "zorder-"))
     }
-    val z = zValue(st.statCols.map(col), ranges, bits)
-    writeStaged(
-      serve(spark, dir, st, st.files)
-        .withColumn("__graft_z", z)
-        .repartitionByRange(targetFiles, col("__graft_z"))
-        .sortWithinPartitions("__graft_z")
-        .drop("__graft_z"),
-      st.partCol, st.bloomCols, staging.toString, st.fieldIds)
-    val added = renameStagedIn(fs, root, staging, s"zorder-$gen-$token-",
-      st.partCol, st.statCols)
-    interruptBeforeManifest()
-    if (!tryWriteFull(fs, root, st.copy(gen = gen, files = added,
-        batches = renderWm(mergeWm(st.watermarks, ledgerFromFileNames(st))),
-        dvs = Seq.empty), rewrite = true)) {
-      added.foreach(e => fs.delete(new Path(root, e.path), false))
-      fs.delete(staging, true)
-      require(attemptsLeft > 1,
-        s"z-order lost the manifest race repeatedly at $dir — yielding to the writers")
-      zorderAttempt(spark, dir, targetFiles, attemptsLeft - 1)
-      return
-    }
-    fs.delete(staging, true)
-  }
 
   // ──────────────────────────── read protocols ────────────────────────────
 
@@ -2223,9 +2121,7 @@ object IndexManifest {
 
   /** Read the CURRENT generation. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     serve(spark, dir, st, st.files)
   }
 
@@ -2245,9 +2141,7 @@ object IndexManifest {
     * (metadata-only) and makes the frame self-describing. */
   def readPartitions(spark: SparkSession, dir: String, values: Seq[String]): DataFrame = {
     require(values.nonEmpty, "at least one partition value")
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     val prefixes = values.map(v => s"${st.partCol}=$v/").toSet
     val kept = st.files.filter(f => prefixes.exists(f.path.startsWith))
     if (kept.isEmpty)
@@ -2270,9 +2164,7 @@ object IndexManifest {
     * partitioning for exchange planning on the bucket keys). Requires
     * the table to have been published with a bucketed [[TableSpec]]. */
   def readBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     require(st.buckets > 0, s"table at $dir declares no bucket layout")
     val schema = readSchema(spark, st).getOrElse(
       sys.error(s"bucketed read needs a manifest-held schema at $dir"))
@@ -2312,9 +2204,7 @@ object IndexManifest {
     * in-file filter still runs (zone maps prune at file granularity),
     * and pushes down to the parquet scan as usual. */
   def readRange(spark: SparkSession, dir: String, lo: Long, hi: Long): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     prunedRead(spark, dir, st, lo, hi)
   }
 
@@ -2343,9 +2233,7 @@ object IndexManifest {
     * clustering column always could. */
   def readRangeOn(spark: SparkSession, dir: String, statCol: String,
       lo: Long, hi: Long): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     prunedReadOn(spark, dir, st, statCol, lo, hi)
   }
 
@@ -2459,9 +2347,7 @@ object IndexManifest {
   def readPoints(spark: SparkSession, dir: String, column: String,
       values: Seq[Long]): DataFrame = {
     require(values.nonEmpty, "at least one probe value")
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     require(st.files.nonEmpty, s"manifest gen ${st.gen} at $dir lists no files")
     val (scan, _, _) = planPoint(spark, dir, st, column, values)
     if (scan.isEmpty) scanOf(spark, dir, st, st.files.take(1)).filter(lit(false))
@@ -2488,8 +2374,7 @@ object IndexManifest {
     * catalog. */
   def countRows(spark: SparkSession, dir: String): Long = {
     import spark.implicits._
-    val st = currentState(spark, dir).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     require(st.files.forall(_.rows >= 0),
       s"table at $dir carries stats-less (v1) entries — counts need a normalizing commit")
     val deleted =
@@ -2511,8 +2396,7 @@ object IndexManifest {
     * caller if needed — , `cnt` LONG), one row per non-empty partition. */
   def partitionCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val st = currentState(spark, dir).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     require(st.files.forall(_.rows >= 0),
       s"table at $dir carries stats-less (v1) entries — counts need a normalizing commit")
     def partDir(rel: String): String = rel.takeWhile(_ != '/')
@@ -2889,9 +2773,7 @@ object IndexManifest {
     * ships. */
   def changesSince(spark: SparkSession, dir: String,
       lastGen: Long): Option[(DataFrame, Long)] = {
-    val (fs, root) = fsOf(spark, dir)
-    val st = current(fs, root).getOrElse(
-      sys.error(s"no manifest at $dir — publishBase first"))
+    val st = currentOrFail(spark, dir)
     if (st.gen <= lastGen) None
     else Some((changes(spark, dir, lastGen, st.gen), st.gen))
   }

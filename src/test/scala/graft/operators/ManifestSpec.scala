@@ -52,6 +52,14 @@ class ManifestSpec extends AnyFunSuite with Matchers {
     IndexManifest.publishBase(spark, batch(0, 40), dir)
   }
 
+  /** Names of every data file on disk, referenced by a manifest or not. */
+  private def dataFileNames(): Seq[String] = {
+    val (fs, root) = fsRoot
+    fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
+      .flatMap(cd => fs.listStatus(cd.getPath)).map(_.getPath.getName).toSeq
+  }
+
   test("publish + append + read: manifest serves exactly base ∪ batches") {
     freshIndex()
     served() shouldBe rowsOf(batch(0, 40))
@@ -196,6 +204,121 @@ class ManifestSpec extends AnyFunSuite with Matchers {
     val (fs, root) = fsRoot
     IndexManifest.current(fs, root).get.paths
       .groupBy(_.split('/').head).values.foreach(_.size shouldBe 1)
+  }
+
+  test("CONCURRENT WRITERS: an append that loses the CAS to a racing addCheck re-checks the new constraint — the violating batch lands nothing") {
+    freshIndex()
+    IndexManifest.interruptBeforeManifest = () => {
+      IndexManifest.interruptBeforeManifest = () => ()
+      IndexManifest.addCheck(spark, dir, "nonneg", "vec_id >= 0")
+    }
+    val e = try intercept[RuntimeException] {
+      IndexManifest.appendBatch(spark, batch(-10, 5), dir, "day1") // vec_id -10..-6
+    } finally IndexManifest.interruptBeforeManifest = () => ()
+    e.getMessage should include("violates CHECK constraint(s) nonneg")
+    val (fs, root) = fsRoot
+    val st = IndexManifest.current(fs, root).get
+    st.gen shouldBe 2L // base=1, the racing addCheck=2, no append commit
+    st.checks shouldBe Seq("nonneg" -> "vec_id >= 0")
+    served() shouldBe rowsOf(batch(0, 40))
+    // the loser's renamed-in files are deleted, not just unreferenced
+    dataFileNames().filter(_.startsWith("ingest-day1-")) shouldBe empty
+  }
+
+  test("CAS-LOSS TABLE: every verb that loses the CAS to a racing append redoes on the new current — racer served, effect present, one commit past the racer; a verb that always loses gives up after 4 tries and deletes its files") {
+    // a second integral stat column `w` gives zorder two dimensions
+    def rows(id0: Long, n: Int) = batch(id0, n).withColumn("w", col("vec_id") % 7)
+    val spec = IndexManifest.TableSpec("cell", Seq("vec_id", "w"))
+    val (fs, root) = fsRoot
+    def base(): Unit = {
+      fs.delete(root, true)
+      IndexManifest.publishBase(spark, rows(0, 40), dir, spec)
+    }
+    def twoGens(): Unit = { base(); IndexManifest.appendBatch(spark, rows(100, 12), dir, "day1") }
+    def withCheck(): Unit = { twoGens(); IndexManifest.addCheck(spark, dir, "nonneg", "vec_id >= 0") }
+    // gen 2 = gen 1's record without its field ids: a pre-id log, so the
+    // racer writes its files without ids
+    def legacy(): Unit = {
+      base()
+      val in = fs.open(new Path(root, "_manifests/manifest-000000001.json"))
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val body = txt.substring(txt.indexOf("\"body\":") + 7, txt.length - 1)
+      writeManifestBytes(f"manifest-${2L}%09d.json", forgeManifest(2L, body
+        .replaceAll(""""fieldids":\[.*?\]\],""", "")
+        .replace("\"generation\":1", "\"generation\":2")))
+    }
+    def names(st: IndexManifest.State, under: String = "") =
+      st.paths.filter(_.startsWith(under)).map(_.split('/').last)
+    def columns() = IndexManifest.read(spark, dir).columns.toSeq
+    final case class Case(verb: String, prepare: () => Unit, run: () => Unit,
+        effect: IndexManifest.State => Unit)
+    val cases = Seq(
+      Case("compactPartitions", twoGens,
+        () => IndexManifest.compactPartitions(spark, dir, Seq("0"), "vec_id"),
+        st => { names(st, "cell=0/") should have size 1
+          names(st, "cell=0/").head should startWith("compact-") }),
+      Case("compactSmall", twoGens,
+        () => IndexManifest.compactSmall(spark, dir, "vec_id", minRows = 1000L),
+        st => names(st).foreach(_ should startWith("compact-"))),
+      Case("zorder", twoGens,
+        () => IndexManifest.zorder(spark, dir, targetFiles = 4),
+        st => names(st).foreach(_ should startWith("zorder-"))),
+      Case("upgradeFieldIds", legacy,
+        () => IndexManifest.upgradeFieldIds(spark, dir, "vec_id"),
+        st => st.fieldIds should not be empty),
+      Case("renameColumn", twoGens,
+        () => IndexManifest.renameColumn(spark, dir, "codes", "payload"),
+        _ => columns() should (contain("payload") and not contain "codes")),
+      Case("dropColumn", twoGens,
+        () => IndexManifest.dropColumn(spark, dir, "codes"),
+        _ => columns() should not contain "codes"),
+      Case("addCheck", twoGens,
+        () => IndexManifest.addCheck(spark, dir, "nonneg", "vec_id >= 0"),
+        st => st.checks shouldBe Seq("nonneg" -> "vec_id >= 0")),
+      Case("dropCheck", withCheck,
+        () => IndexManifest.dropCheck(spark, dir, "nonneg"),
+        st => st.checks shouldBe empty))
+    cases.foreach { c =>
+      withClue(s"${c.verb}: ") {
+        c.prepare()
+        val g0 = IndexManifest.current(fs, root).get.gen
+        val rows0 = IndexManifest.read(spark, dir).count()
+        var raced = false
+        IndexManifest.interruptBeforeManifest = () => {
+          IndexManifest.interruptBeforeManifest = () => ()
+          raced = true
+          IndexManifest.appendBatch(spark, rows(900, 8), dir, "racer")
+        }
+        try c.run() finally IndexManifest.interruptBeforeManifest = () => ()
+        raced shouldBe true
+        val st = IndexManifest.current(fs, root).get
+        st.gen shouldBe g0 + 2 // the racer, then the verb's redo
+        IndexManifest.read(spark, dir).count() shouldBe rows0 + 8
+        IndexManifest.read(spark, dir).filter(col("vec_id") >= 900L).count() shouldBe 8L
+        c.effect(st)
+      }
+    }
+
+    // BUDGET: a racer lands before EVERY publish — compact yields after
+    // 4 tries, and the last loser's compact- files are gone from disk
+    twoGens()
+    val g0 = IndexManifest.current(fs, root).get.gen
+    var racers = 0
+    def racer(): Unit = {
+      IndexManifest.interruptBeforeManifest = () => ()
+      racers += 1
+      IndexManifest.appendBatch(spark, rows(1000L + 100L * racers, 4), dir, s"racer$racers")
+      IndexManifest.interruptBeforeManifest = () => racer()
+    }
+    IndexManifest.interruptBeforeManifest = () => racer()
+    val e = try intercept[RuntimeException] { IndexManifest.compact(spark, dir, "vec_id") }
+      finally IndexManifest.interruptBeforeManifest = () => ()
+    e.getMessage should include("lost the manifest race")
+    e.getMessage should include(dir)
+    racers shouldBe 4
+    IndexManifest.current(fs, root).get.gen shouldBe g0 + 4
+    dataFileNames().filter(_.startsWith("compact-")) shouldBe empty
+    fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith(".compact-")) shouldBe empty
   }
 
   test("TRUE CONCURRENCY: four writer THREADS appending simultaneously — every batch lands exactly once, the generation chain is gapless") {
@@ -1638,6 +1761,30 @@ class ManifestSpec extends AnyFunSuite with Matchers {
     org.apache.hadoop.fs.FileUtil.copy(fs, op, fs, root, false, true,
       spark.sparkContext.hadoopConfiguration)
     served() shouldBe rowsOf(batch(900, 11))
+    // a swap that keeps name, length AND mtime (`cp -a` and `rsync -a`
+    // keep mtimes): two one-generation trees whose records differ in one
+    // file name; b's record copied over a's, a's mtime restored — the
+    // key's record checksum still tells them apart
+    def record(d: String, w: Int): Path = {
+      val r = new Path(d)
+      fs.delete(r, true)
+      IndexManifest.tryWriteManifest(fs, r, 1L,
+        Seq(IndexManifest.FileEntry(s"cell=0/ingest-w_$w-part-0.parquet", 1L, 0L, 0L)),
+        Seq("w:1")) shouldBe true
+      new Path(r, "_manifests/manifest-000000001.json")
+    }
+    val recA = record(dir + "_swap_a", 1)
+    val recB = record(dir + "_swap_b", 2)
+    val rootA = new Path(dir + "_swap_a")
+    IndexManifest.resolve(fs, rootA, 1L).paths shouldBe Seq("cell=0/ingest-w_1-part-0.parquet")
+    val mtime = fs.getFileStatus(recA).getModificationTime
+    val bytes = { val in = fs.open(recB); try in.readAllBytes() finally in.close() }
+    bytes.length.toLong shouldBe fs.getFileStatus(recA).getLen
+    val out = fs.create(recA, true)
+    try out.write(bytes) finally out.close()
+    fs.setTimes(recA, mtime, -1)
+    fs.getFileStatus(recA).getModificationTime shouldBe mtime
+    IndexManifest.resolve(fs, rootA, 1L).paths shouldBe Seq("cell=0/ingest-w_2-part-0.parquet")
   }
 
   test("parsed-state memo is bounded: a reader following a writer holds at most the cap") {

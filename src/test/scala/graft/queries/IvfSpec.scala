@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The `spark.graft.ivf.step` operating knob (q201/q202), exercised
-  * through the SESSION-CONF path the env var mirrors. */
+  * through the session conf. */
 class IvfSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
