@@ -18,7 +18,7 @@ object Coverage {
   final case class Row(id: String, title: String, keys: Seq[String], note: String = "")
 
   val rows: Seq[Row] = Seq(
-    Row("S1", "xlsx DSv2 scan (ZIP+StAX, vectorized + streaming)", Seq("q68_xlsx_region", "q69_xlsx_nation")),
+    Row("S1", "xlsx DSv2 scan (ZIP + byte-level tokenizer, vectorized + streaming)", Seq("q68_xlsx_region", "q69_xlsx_nation")),
     Row("S2", "multi-sheet / multi-file xlsx + sheet selection", Seq("q135_xlsx_multifile")),
     Row("S3", "type inference / sanitization (1904+Lotus, numFmt, inlineStr)", Seq(),
       "test-only by design: property/roundtrip/corner-case suites (XlsxPropertySpec, XlsxCornerCaseSpec)"),

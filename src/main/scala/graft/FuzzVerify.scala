@@ -33,7 +33,7 @@ object FuzzVerify {
   /** xlsx-bridge registration (fuzz-over-xlsx, round-7 directive #5):
     * every fixture table round-trips through the repo's OWN xlsx writer
     * and DSv2 reader before becoming a view, so the whole generated-SQL
-    * corpus differentially tests the writer→ZIP/StAX parser→type bridge
+    * corpus differentially tests the writer→ZIP/tokenizer→type bridge
     * against DuckDB reading the original parquet — any value the bridge
     * mangles surfaces as an oracle mismatch on some generated query.
     * xlsx has ONE numeric type and no timestamp type, so the bridge is

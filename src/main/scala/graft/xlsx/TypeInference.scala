@@ -44,7 +44,8 @@ object TypeInference {
   /** One streaming pass over the sheet's prefix: finds the header row,
     * column count, and per-column types from the first `sampleRows` data
     * rows, then stops reading — rows past the sample are never parsed, so
-    * inference costs the sample, not the sheet. */
+    * inference costs the sample, not the sheet. Data rows only count cell
+    * kinds: no per-cell value is built. */
   def infer(zip: ZipFile, partName: String, shared: Array[String],
             dateStyle: Array[Boolean], headerRow: Boolean, inferTypes: Boolean,
             sampleRows: Int = 10000, skipRows: Int = 0): SheetSchema = {
@@ -53,38 +54,64 @@ object TypeInference {
     val stats = scala.collection.mutable.ArrayBuffer[ColStat]()
     var dataRows = 0
     var toSkip = skipRows
+    // the current row's cells: the header candidate's values, or a data
+    // row's (column, kind) pairs
+    val headerCells = scala.collection.mutable.ArrayBuffer[(Int, CellValue)]()
+    var cols = new Array[Int](64)
+    var kinds = new Array[Int](64)
+    var nCells = 0
+    var rowMax = -1
 
     def sampled = dataRows == sampleRows && (header.isDefined || !headerRow)
-    val rows = rowIterator(zip, partName, shared, dateStyle, _ => true)
-    try while (!sampled && rows.hasNext) {
-      val row = rows.next()
-      if (row.hasAnyCell && toSkip > 0) toSkip -= 1 // pre-header banner rows
-      else if (row.hasAnyCell && dataRows <= sampleRows) {
-        // cells can be empty even when hasAnyCell (all-error cells, bad
-        // shared-string refs): maxOption keeps such rows from failing
-        // inference — they contribute no columns.
-        if (headerRow && header.isEmpty) {
-          header = Some(row.cells)
-          maxCol = math.max(maxCol, row.cells.map(_._1).maxOption.getOrElse(-1))
-        } else if (dataRows < sampleRows) {
-          dataRows += 1
-          maxCol = math.max(maxCol, row.cells.map(_._1).maxOption.getOrElse(-1))
-          while (stats.size <= maxCol) stats += new ColStat
-          row.cells.foreach { case (c, v) =>
-            val st = stats(c)
-            st.n += 1
-            v match {
-              case XNumber(_, true) => st.nDate += 1
-              case XNumber(_, false) => st.nNum += 1
-              case XBool(_) => st.nBool += 1
-              case XIsoDate(_) => st.nDate += 1
-              case XString(_) => st.nStr += 1
-              case XBlank =>
+    val cur = new SheetCursor(zip, partName, shared, dateStyle, _ => true, failFast = false)
+    try {
+      var ev = 0
+      while (!sampled && { ev = cur.advance(); ev != SheetCursor.End }) {
+        val isHeader = headerRow && header.isEmpty
+        if (ev == SheetCursor.Cell) {
+          rowMax = math.max(rowMax, cur.col)
+          if (toSkip > 0) {} // pre-header banner rows
+          else if (isHeader) headerCells += ((cur.col, cur.cellValue))
+          else {
+            if (nCells == cols.length) {
+              cols = java.util.Arrays.copyOf(cols, nCells * 2)
+              kinds = java.util.Arrays.copyOf(kinds, nCells * 2)
+            }
+            cols(nCells) = cur.col
+            // a date-styled number counts as a date, like an ISO date cell
+            kinds(nCells) = if (cur.kind == SheetCursor.Num && cur.isDate) SheetCursor.Iso else cur.kind
+            nCells += 1
+          }
+        } else if (cur.rowHasCell) { // row end
+          // cells can be absent even when the row is valued (all-error
+          // cells, bad shared-string refs): such rows contribute no columns
+          if (toSkip > 0) toSkip -= 1
+          else if (dataRows <= sampleRows) {
+            if (isHeader) {
+              header = Some(headerCells.toArray)
+              maxCol = math.max(maxCol, rowMax)
+            } else if (dataRows < sampleRows) {
+              dataRows += 1
+              maxCol = math.max(maxCol, rowMax)
+              while (stats.size <= maxCol) stats += new ColStat
+              var j = 0
+              while (j < nCells) {
+                val st = stats(cols(j))
+                st.n += 1
+                kinds(j) match {
+                  case SheetCursor.Iso => st.nDate += 1
+                  case SheetCursor.Num => st.nNum += 1
+                  case SheetCursor.Bool => st.nBool += 1
+                  case _ => st.nStr += 1
+                }
+                j += 1
+              }
             }
           }
-        }
+          headerCells.clear(); nCells = 0; rowMax = -1
+        } else { headerCells.clear(); nCells = 0; rowMax = -1 }
       }
-    } finally rows.close()
+    } finally cur.close()
 
     val nCols = maxCol + 1
     while (stats.size < nCols) stats += new ColStat

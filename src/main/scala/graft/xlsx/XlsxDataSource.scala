@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 xlsx reader: `spark.read.format("xlsx")
@@ -22,7 +21,8 @@ import scala.jdk.CollectionConverters._
   *   task per file and the scan stays embarrassingly parallel — same
   *   contract as gzip'd CSV/JSON).
   * - Column pruning is pushed down (`SupportsPushDownRequiredColumns`):
-  *   pruned cells skip value materialization inside the StAX loop.
+  *   pruned cells are tokenized but never decoded or copied
+  *   ([[SheetCursor]]).
   * - Schema inference is a driver-side sampling pass over the first file
   *   (csv-style two-phase read); pass an explicit schema to skip it.
   *
@@ -185,11 +185,11 @@ class XlsxScanBuilder(fullSchema: StructType, paths: Seq[String], o: XlsxDataSou
     filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  /** Limit pushdown: the pull-based reader simply stops the deflate/StAX
-    * stream after `limit` surviving rows — a LIMIT over a huge workbook
-    * decodes only its prefix. Partial push (return false): Spark still
-    * applies the global limit across partitions, each file just refuses
-    * to produce more than `limit` rows. */
+  /** Limit pushdown: the pull-based reader simply stops inflating and
+    * tokenizing the sheet after `limit` surviving rows — a LIMIT over a
+    * huge workbook decodes only its prefix. Partial push (return false):
+    * Spark still applies the global limit across partitions, each file
+    * just refuses to produce more than `limit` rows. */
   override def pushLimit(n: Int): Boolean = { limit = n; false }
   override def build(): Scan = new XlsxScan(fullSchema, required, paths, o, pushed, limit, streamDir)
 }
@@ -441,13 +441,20 @@ class XlsxReaderFactory(fullSchema: StructType, required: StructType, o: XlsxDat
     new XlsxColumnarReader(partition.asInstanceOf[XlsxInputPartition].path, fullSchema, required, o, pushed, limit)
 }
 
-/** The xlsx read path: pull-based parsing (one row on heap per task),
-  * header skipping, PERMISSIVE conversion and pushed-filter evaluation,
-  * with rows decoded into `OnHeapColumnVector` batches of 4096, so
-  * downstream operators consume `ColumnarBatch`es and Spark's
-  * ColumnarToRow/codegen machinery amortizes per-row overhead — the same
-  * contract the built-in parquet/ORC vectorized readers provide. Memory
-  * stays bounded: one batch per task, reset and refilled in place. */
+/** The xlsx read path: the [[SheetCursor]] decodes each cell straight
+  * into its `OnHeapColumnVector` (batches of 4096), with header skipping,
+  * PERMISSIVE conversion and pushed-filter evaluation in the same loop —
+  * no per-row `Row`, tuple, value array or boxed value. Downstream
+  * operators consume `ColumnarBatch`es and Spark's ColumnarToRow/codegen
+  * machinery amortizes per-row overhead — the same contract the built-in
+  * parquet/ORC vectorized readers provide. Memory stays bounded: one
+  * batch per task, reset and refilled in place.
+  *
+  * Four (cell kind, column type) pairs are written inline: number →
+  * double, number → timestamp micros, shared string → UTF-8 bytes (each
+  * shared string encoded once per task, on first use) and boolean →
+  * boolean; every other pair goes through [[TypeInference.convert]], so
+  * one table still defines the conversion semantics. */
 class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructType,
                          o: XlsxDataSource.Opts,
                          pushed: Array[org.apache.spark.sql.sources.Filter],
@@ -455,11 +462,24 @@ class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructT
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import XlsxColumnarReader._
 
   private var emitted = 0
 
-  private val requiredIdx: Array[Int] = required.fields.map(f => fullSchema.fieldIndex(f.name))
-  private val wanted: Set[Int] = requiredIdx.toSet
+  /** sheet column → position in `required`, or -1 when pruned. */
+  private val posOf: Array[Int] = {
+    val a = Array.fill(fullSchema.length)(-1)
+    required.fields.zipWithIndex.foreach { case (f, i) => a(fullSchema.fieldIndex(f.name)) = i }
+    a
+  }
+  private val types: Array[DataType] = required.fields.map(_.dataType)
+  private val fastType: Array[Int] = types.map {
+    case DoubleType => FDouble
+    case TimestampType => FTimestamp
+    case StringType => FString
+    case BooleanType => FBoolean
+    case _ => FOther
+  }
   // only evaluate filters whose columns this scan actually reads
   private val fieldPos: Map[String, Int] = required.fieldNames.zipWithIndex.toMap
   private val applicable: Array[org.apache.spark.sql.sources.Filter] =
@@ -467,104 +487,126 @@ class XlsxColumnarReader(path: String, fullSchema: StructType, required: StructT
 
   private val zip = new ZipFile(path)
   private val wb = XlsxParser.parseWorkbook(zip)
-  private val rows: XlsxParser.RowIterator = {
+  private val shared = XlsxParser.parseSharedStrings(zip)
+  private val sharedUtf8 = new Array[Array[Byte]](shared.length)
+  private val cur: SheetCursor = {
     val sheet = XlsxDataSource.resolveSheet(wb, o)
-    XlsxParser.rowIterator(zip, sheet.partName, XlsxParser.parseSharedStrings(zip),
-      XlsxParser.parseDateStyles(zip), wanted.contains, o.failFast)
+    new SheetCursor(zip, sheet.partName, shared, XlsxParser.parseDateStyles(zip),
+      c => c >= 0 && c < posOf.length && posOf(c) >= 0, o.failFast)
   }
   private var headerSkipped = !o.headerRow
   private var toSkip = o.skipRows
-  /** col → cell scratch buffer, reused across rows (see nextValues). */
-  private val scratch = new Array[XlsxParser.CellValue](fullSchema.length)
 
   private val capacity = 4096
   private val vectors = OnHeapColumnVector.allocateColumns(capacity, required)
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
+  /** Row slot being filled, and the row serial that set each column's
+    * value in it (a column not stamped by the current row is null). */
+  private var n = 0
+  private var rowSerial = 0
+  private val stamp = new Array[Int](types.length)
+  /** First FAILFAST conversion failure of the row, raised at its end. */
+  private var failure: String = null
+  private var failurePos = Int.MaxValue
+  private val valueOf: String => Any = name => value(fieldPos(name))
 
-  /** The next surviving data row's internal values, or null at end of sheet. */
-  private def nextValues(): Array[Any] = {
-    // pushed limit: stop decoding the stream once this partition has
-    // produced enough rows (each file caps itself; Spark applies the
-    // global limit across files)
-    if (limit >= 0 && emitted >= limit) return null
-    while (rows.hasNext) {
-      val row = rows.next()
-      if (row.hasAnyCell) {
-        if (toSkip > 0) toSkip -= 1 // pre-header banner rows (skipRows)
-        else if (!headerSkipped) headerSkipped = true
-        else {
-          val vals = new Array[Any](requiredIdx.length)
-          // sparse scatter into a reusable scratch array instead of
-          // row.cells.toMap: the per-row Map (boxed keys, hashing, one
-          // allocation per cell) was the scan's dominant cost — ~4× the
-          // StAX parse itself — and its garbage serialized multi-core
-          // scans on GC. Cells are cleared sparsely after projection.
-          val cells = row.cells
-          var j = 0
-          while (j < cells.length) {
-            val c = cells(j)._1
-            if (c < scratch.length) scratch(c) = cells(j)._2
-            j += 1
-          }
-          var i = 0
-          while (i < requiredIdx.length) {
-            val col = requiredIdx(i)
-            val dt = fullSchema.fields(col).dataType
-            val cv0 = scratch(col)
-            val cv = if (cv0 == null) XlsxParser.XBlank else cv0
-            vals(i) = TypeInference.convert(cv, dt, wb.date1904) match {
-              case s: String => UTF8String.fromString(s)
-              case null if o.failFast && cv != XlsxParser.XBlank =>
-                throw new IllegalArgumentException(
-                  s"cell ${cv} is not convertible to $dt at row ${row.rowIndex + 1}, " +
-                    s"column ${col + 1} of $path (mode=FAILFAST)")
-              case other => other
+  /** Decodes the next row into slot `n`; false at the end of the sheet. */
+  private def readRow(): Boolean = {
+    // banner rows, then the header row, are skipped once they turn out
+    // valued; their wanted cells are still decoded (FAILFAST sees them)
+    val data = toSkip == 0 && headerSkipped
+    rowSerial += 1
+    while (true) {
+      val ev = cur.advance()
+      if (ev == SheetCursor.Cell) { if (data) put(posOf(cur.col)) }
+      else if (ev == SheetCursor.RowEnd) {
+        if (cur.rowHasCell) {
+          if (toSkip > 0) toSkip -= 1
+          else if (!headerSkipped) headerSkipped = true
+          else {
+            if (failure != null) throw new IllegalArgumentException(failure)
+            if (applicable.isEmpty || applicable.forall(XlsxFilterEval.eval(_, valueOf))) {
+              var i = 0
+              while (i < stamp.length) { if (stamp(i) != rowSerial) vectors(i).putNull(n); i += 1 }
+              n += 1
+              emitted += 1
             }
-            i += 1
-          }
-          // sparse clear (touch only the cells this row populated)
-          j = 0
-          while (j < cells.length) {
-            val c = cells(j)._1
-            if (c < scratch.length) scratch(c) = null
-            j += 1
-          }
-          if (applicable.isEmpty ||
-              applicable.forall(XlsxFilterEval.eval(_, name => vals(fieldPos(name))))) {
-            emitted += 1
-            return vals
           }
         }
-      }
+        failure = null; failurePos = Int.MaxValue
+        return true
+      } else return false
     }
-    null
+    false
   }
 
-  override def next(): Boolean = {
-    var n = 0
-    vectors.foreach(_.reset())
-    var vals = if (n < capacity) nextValues() else null
-    while (vals != null) {
-      var i = 0
-      while (i < vals.length) {
-        val vec = vectors(i)
-        vals(i) match {
-          case null => vec.putNull(n)
-          case u: UTF8String => vec.putByteArray(n, u.getBytes)
+  /** Writes the cursor's current cell into column `i` of slot `n`. */
+  private def put(i: Int): Unit = {
+    val vec = vectors(i)
+    cur.kind match {
+      case SheetCursor.Num if fastType(i) == FDouble => vec.putDouble(n, cur.num)
+      case SheetCursor.Num if fastType(i) == FTimestamp =>
+        vec.putLong(n, XlsxParser.serialToMicros(cur.num, wb.date1904))
+      case SheetCursor.Shared if fastType(i) == FString =>
+        var b = sharedUtf8(cur.sharedIdx)
+        if (b == null) {
+          b = shared(cur.sharedIdx).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          sharedUtf8(cur.sharedIdx) = b
+        }
+        vec.putByteArray(n, b)
+      case SheetCursor.Bool if fastType(i) == FBoolean => vec.putBoolean(n, cur.bool)
+      case _ =>
+        val cv = cur.cellValue
+        TypeInference.convert(cv, types(i), wb.date1904) match {
+          case null =>
+            stamp(i) = 0
+            if (o.failFast && i < failurePos) {
+              failurePos = i
+              failure = s"cell ${cv} is not convertible to ${types(i)} at row ${cur.rowIndex + 1}, " +
+                s"column ${cur.col + 1} of $path (mode=FAILFAST)"
+            }
+            return
+          case s: String => vec.putByteArray(n, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           case d: java.lang.Double => vec.putDouble(n, d)
           case b: java.lang.Boolean => vec.putBoolean(n, b)
           case l: java.lang.Long => vec.putLong(n, l) // timestamp micros
           case other => throw new IllegalStateException(
-            s"unexpected xlsx value ${other.getClass} for ${required.fields(i).dataType}")
+            s"unexpected xlsx value ${other.getClass} for ${types(i)}")
         }
-        i += 1
-      }
-      n += 1
-      vals = if (n < capacity) nextValues() else null
     }
+    stamp(i) = rowSerial
+  }
+
+  /** Column `i`'s internal value in slot `n` (for pushed filters). */
+  private def value(i: Int): Any =
+    if (stamp(i) != rowSerial) null
+    else fastType(i) match {
+      case FDouble => vectors(i).getDouble(n)
+      case FTimestamp => vectors(i).getLong(n)
+      case FString => vectors(i).getUTF8String(n)
+      case FBoolean => vectors(i).getBoolean(n)
+      case _ => null
+    }
+
+  override def next(): Boolean = {
+    vectors.foreach(_.reset())
+    n = 0
+    // pushed limit: stop decoding the stream once this partition has
+    // produced enough rows (each file caps itself; Spark applies the
+    // global limit across files)
+    while (n < capacity && (limit < 0 || emitted < limit) && readRow()) {}
     batch.setNumRows(n)
     n > 0
   }
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = { try batch.close() finally try rows.close() finally zip.close() }
+  override def close(): Unit = { try batch.close() finally try cur.close() finally zip.close() }
+}
+
+private object XlsxColumnarReader {
+  // column types with an inline write path
+  final val FOther = 0
+  final val FDouble = 1
+  final val FTimestamp = 2
+  final val FString = 3
+  final val FBoolean = 4
 }
